@@ -91,15 +91,15 @@ def entry(spark: SparkSession) -> DataFrame:
 # and the stoichiometry/order edge aggregation) into pure SQL over the
 # same fixture parquet — a fully independent execution path.
 def _kg_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # impl pinned to "sql": the contract must exercise the scale path
-    # even at fixture size (auto-dispatch would pick pandas here; the
+    # the JVM path directly: the contract must exercise the scale path
+    # even at fixture size (the size dispatch would pick pandas here; the
     # pandas path has its own entry below)
     from pyspark.sql import functions as F
 
-    from kg.extract import extract_triples
+    from kg.extract import extract_triples_sql
 
     tr, _, _ = _load_fixtures(spark)
-    return extract_triples(tr, impl="sql").select(
+    return extract_triples_sql(tr).select(
         "conv_id",
         F.col("turn_idx").cast("long").alias("turn_idx"),
         F.col("span_start").cast("long").alias("span_start"),
@@ -135,26 +135,6 @@ def _kg_linked(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     tr, cat, _ = _load_fixtures(spark)
     return link_triples(extract_triples(tr), cat).select(
-        "conv_id",
-        F.col("turn_idx").cast("long").alias("turn_idx"),
-        F.col("span_start").cast("long").alias("span_start"),
-        "subj_id",
-        "pred",
-        "obj_id",
-    )
-
-
-def _kg_linked_hashed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """kg_linked_triples under the opt-in fixed-width minted-id mode
-    (kg/link.py HASHED_MINT_CONF) — proves the hashed mint stays in
-    lockstep with an independent SQL engine's md5."""
-    from pyspark.sql import functions as F
-
-    from kg.extract import extract_triples
-    from kg.link import link_triples
-
-    tr, cat, _ = _load_fixtures(spark)
-    return link_triples(extract_triples(tr), cat, hashed_ids=True).select(
         "conv_id",
         F.col("turn_idx").cast("long").alias("turn_idx"),
         F.col("span_start").cast("long").alias("span_start"),
@@ -214,7 +194,6 @@ _PRIORITY = [
     "kg_extract_triples",
     "kg_extract_triples_pandas",
     "kg_linked_triples",
-    "kg_linked_triples_hashed",
     "kg_connected_components",
     "kg_edges",
     "kg_nodes",
@@ -261,7 +240,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             "kg_extract_triples": _kg_extract,
             "kg_extract_triples_pandas": _kg_extract_pandas,
             "kg_linked_triples": _kg_linked,
-            "kg_linked_triples_hashed": _kg_linked_hashed,
             "kg_connected_components": _kg_components,
             "kg_edges": _kg_edges,
             "kg_nodes": _kg_nodes,
@@ -464,14 +442,9 @@ def _kg_sql_fragments(p: dict[str, str]) -> dict[str, str]:
       SELECT 'edit:kg-pipeline', 'InstanceEdit|Entity',
              'kg-importer, 2025-03-01 00:00:00', 'InstanceEdit')
     """
-    # hashed-minted-id variant (spark.kg.link.hashedMintedIds): identical
-    # except the miss branch mints fixed-width 'new:' || md5(key)
-    link_hashed = link.replace(
-        "'new:' || k.sk", "'new:' || md5(k.sk)"
-    ).replace("'new:' || k.ok", "'new:' || md5(k.ok)")
     return {
-        "extract": extract, "link": link, "link_hashed": link_hashed,
-        "cc": cc, "edges": edges, "nodes": nodes,
+        "extract": extract, "link": link, "cc": cc, "edges": edges,
+        "nodes": nodes,
     }
 
 
@@ -484,9 +457,6 @@ def _kg_oracle_sql() -> dict[str, str]:
         ),
         "kg_linked_triples": (
             f"WITH {frags['extract']}, {frags['link']} SELECT * FROM linked"
-        ),
-        "kg_linked_triples_hashed": (
-            f"WITH {frags['extract']}, {frags['link_hashed']} SELECT * FROM linked"
         ),
         "kg_connected_components": (
             f"WITH RECURSIVE {frags['cc']} SELECT * FROM mapping"

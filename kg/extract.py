@@ -17,10 +17,6 @@ Extraction rules (replicated exactly by kg/oracle.py — the P/R contract):
   R2 across consecutive turns (sorted order), last mention of turn k →
      first mention of turn k+1:            (m_last, followed_by, m_first)
   R3 tool turns, each mention:             (m, produced_by, tool::<name>)
-
-The per-turn text invariant (BASELINE.json input_hint) is testable via
-round_trip_text(): the Arrow stage must return every turn's text unchanged
-under stable (conv_id, turn_idx) ordering.
 """
 
 from __future__ import annotations
@@ -61,17 +57,6 @@ PRED_CO_OCCURS = "co_occurs_with"
 PRED_FOLLOWED_BY = "followed_by"
 PRED_PRODUCED_BY = "produced_by"
 TOOL_SURFACE_PREFIX = "tool::"
-
-
-def _turn_mentions(text: str | None) -> list[tuple[int, str]]:
-    if not text:
-        return []
-    # blank surfaces ([[]] / [[  ]]) are noise, not mentions
-    return [
-        (m.start(), m.group(1))
-        for m in MENTION_RE.finditer(text)
-        if m.group(1).strip(ASCII_WS)
-    ]
 
 
 def _extract_block(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -149,54 +134,38 @@ def _extract_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         yield _extract_block(carry)
 
 
-def extract_triples(
-    transcripts: DataFrame,
-    num_partitions: int | None = None,
-    impl: str | None = None,
-) -> DataFrame:
-    """transcripts → raw triples (dispatcher).
+def extract_triples(transcripts: DataFrame) -> DataFrame:
+    """transcripts → raw triples, dispatched on input size.
 
     Two implementations with identical semantics (equivalence asserted by
     tests/test_extract.py::test_sql_equals_pandas on the synth corpus plus
     adversarial strings):
 
-    - ``sql``: pure JVM built-ins — regexp_extract_all +
+    - ``extract_triples_sql``: pure JVM built-ins — regexp_extract_all +
       split-parts cumsum for spans, one window for the cross-turn rule,
       one explode.  Whole-stage codegen end to end; no Python worker, so
       each task is ONE runnable thread (the pandas path keeps two: python
       worker + JVM Arrow feeder), which is what capped measured scaling
       at 8→32 cores on a single host (BENCH/BASELINE.md round 2).
-    - ``pandas``: the mapInPandas path (kept as the §2.10 UDF-surface
-      demo and for the stateful-streaming variant that shares its core).
+    - ``extract_triples_pandas``: the mapInPandas path.
 
-    Select via ``impl=`` or ``spark.kg.extract.impl`` (default ``auto``).
-
-    ``auto`` dispatches on input size — the same adaptive pattern as
-    connected_components' driver/distributed split: a bounded
-    limit-count probe (stops scanning at threshold+1 rows, so its cost
-    does not grow with the corpus) picks ``pandas`` under
-    ``spark.kg.extract.autoThresholdTurns`` (default 2M turns) and
-    ``sql`` above.  Measured basis (same host, fresh JVMs, best-of-3,
-    local[32]): at 224k turns pandas extracts in 1.1s vs sql 2.3s (the
-    sql plan's extra shuffle+window stages are pure latency overhead on
-    tiny inputs, and Python-worker reuse amortizes to nothing); at 60M
-    turns sql wins 24.9s vs 33.3s AND scales 8→32 cores where the
-    pandas path's 2-threads-per-task structure caps out (0.552 → 0.693
-    measured pipeline efficiency, BENCH/BASELINE.md).
+    The dispatch is the same adaptive pattern as connected_components'
+    driver/distributed split: a bounded limit-count probe (stops scanning
+    at threshold+1 rows, so its cost does not grow with the corpus) picks
+    pandas under ``spark.kg.extract.autoThresholdTurns`` (default 2M
+    turns) and sql above.  Measured basis (same host, fresh JVMs,
+    best-of-3, local[32]): at 224k turns pandas extracts in 1.1s vs sql
+    2.3s (the sql plan's extra shuffle+window stages are pure latency
+    overhead on tiny inputs, and Python-worker reuse amortizes to
+    nothing); at 60M turns sql wins 24.9s vs 33.3s AND scales 8→32 cores
+    where the pandas path's 2-threads-per-task structure caps out (0.552
+    → 0.693 measured pipeline efficiency, BENCH/BASELINE.md).
     """
     spark = transcripts.sparkSession
-    if impl is None:
-        impl = spark.conf.get("spark.kg.extract.impl", "auto")
-    if impl == "auto":
-        thr = int(spark.conf.get("spark.kg.extract.autoThresholdTurns", "2000000"))
-        impl = "pandas" if _turns_at_most(transcripts, thr) else "sql"
-    if impl == "pandas":
-        return extract_triples_pandas(transcripts, num_partitions)
-    if impl != "sql":
-        raise ValueError(
-            f"unknown extract impl {impl!r} (want 'auto', 'sql' or 'pandas')"
-        )
-    return extract_triples_sql(transcripts, num_partitions)
+    thr = int(spark.conf.get("spark.kg.extract.autoThresholdTurns", "2000000"))
+    if _turns_at_most(transcripts, thr):
+        return extract_triples_pandas(transcripts)
+    return extract_triples_sql(transcripts)
 
 
 def _turns_at_most(transcripts: DataFrame, thr: int) -> bool:
@@ -207,9 +176,7 @@ def _turns_at_most(transcripts: DataFrame, thr: int) -> bool:
     return rows_at_most(transcripts, thr)
 
 
-def extract_triples_sql(
-    transcripts: DataFrame, num_partitions: int | None = None
-) -> DataFrame:
+def extract_triples_sql(transcripts: DataFrame) -> DataFrame:
     """Pure-JVM extraction: the same rules R1-R3 (incl. char spans) as the
     pandas path, expressed entirely in Catalyst built-ins.
 
@@ -244,8 +211,7 @@ def extract_triples_sql(
     Blank surfaces are dropped AFTER span computation (offsets count
     them), matching MENTION_RE.finditer + the strip() filter.
     """
-    spark = transcripts.sparkSession
-    n = num_partitions or spark.sparkContext.defaultParallelism
+    n = transcripts.sparkSession.sparkContext.defaultParallelism
     pat = MENTION_PAT_JAVA
     txt = F.coalesce(F.col("text"), F.lit(""))
     # R3's object is derivable per-turn — fold role+tool into it here so
@@ -349,7 +315,7 @@ def extract_triples_sql(
     )
 
 
-def extract_triples_pandas(transcripts: DataFrame, num_partitions: int | None = None) -> DataFrame:
+def extract_triples_pandas(transcripts: DataFrame) -> DataFrame:
     """transcripts → raw triples over surface forms (Arrow-vectorized).
 
     One hash shuffle on conv_id co-locates each conversation, sorted by
@@ -363,14 +329,7 @@ def extract_triples_pandas(transcripts: DataFrame, num_partitions: int | None = 
     maxRecordsPerBatch + the carry logic (triples look back one turn, so
     a split conversation is stitched exactly).
     """
-    spark = transcripts.sparkSession
-    if num_partitions is None:
-        # tunable: each UDF task keeps ~2 threads runnable (python worker +
-        # JVM Arrow feeder); on a shared local box, cores/2 partitions can
-        # beat cores (see PLANS.md).  Default stays defaultParallelism.
-        conf = spark.conf.get("spark.kg.extract.partitions", None)
-        num_partitions = int(conf) if conf else spark.sparkContext.defaultParallelism
-    n = num_partitions
+    n = transcripts.sparkSession.sparkContext.defaultParallelism
     cols = ["conv_id", "turn_idx", "role", "text", "tool"]
     return (
         transcripts.select(*cols)  # column pruning before the shuffle
@@ -403,24 +362,12 @@ def extract_mentions(transcripts: DataFrame) -> DataFrame:
     )
 
 
-def round_trip_text(transcripts: DataFrame) -> DataFrame:
-    """Identity pass through the Arrow/pandas stage, preserving every
-    column — used by the per-turn text-equality invariant test."""
-
-    def _identity(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            yield pdf
-
-    return transcripts.mapInPandas(_identity, schema=transcripts.schema)
-
-
 __all__ = [
     "extract_triples",
     "extract_triples_sql",
     "extract_triples_pandas",
     "extract_mentions",
     "extract_conversation",
-    "round_trip_text",
     "MENTION_RE",
     "PRED_CO_OCCURS",
     "PRED_FOLLOWED_BY",

@@ -5,8 +5,9 @@ importer Person node, InstanceEdit with timestamp, created/author edges)
 and the coarse progress/elapsed logging (ReactomeBatchImporter.java:139,
 172-173,187-191).  Spark design per SURVEY: each stage writes a parquet
 (Iceberg-shaped) table plus a ``_manifest.json`` recording stage name,
-input snapshot id, per-partition row counts, and wall time; a restarted
-run skips stages whose manifest matches the current input snapshot —
+input snapshot id, pipeline format, per-partition row counts, and wall
+time; a restarted run skips stages whose manifest matches the current
+input snapshot and format —
 the anti-join-vs-completed-work semantics, implemented at stage
 granularity (atomic overwrite per stage ⇒ idempotent retries; SURVEY.md
 §7 risk 5: never non-idempotent appends).
@@ -21,6 +22,11 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+# Version of what the stages write.  Bump it whenever a stage's output
+# changes for the same inputs: manifests written under another format are
+# not resumed past, so a rerun never returns output the current code
+# cannot produce.  (Manifests from before this field existed carry none.)
+PIPELINE_FORMAT = 2
 
 def partition_lineage(df: DataFrame) -> list[dict]:
     """Per-partition row counts of a materialized DataFrame (the
@@ -40,15 +46,18 @@ def _manifest_path(out_dir: str, stage: str) -> str:
 
 def stage_is_complete(out_dir: str, stage: str, input_snapshot: str) -> bool:
     """A stage is resumable-past iff its manifest exists AND was produced
-    from the same input snapshot (content checksum, not mtime)."""
+    from the same input snapshot (content checksum, not mtime) by the
+    same PIPELINE_FORMAT."""
     p = _manifest_path(out_dir, stage)
     if not os.path.exists(p):
         return False
     try:
         with open(p) as f:
             m = json.load(f)
-        return m.get("input_snapshot") == input_snapshot and os.path.exists(
-            os.path.join(m["path"], "_SUCCESS")
+        return (
+            m.get("input_snapshot") == input_snapshot
+            and m.get("format") == PIPELINE_FORMAT
+            and os.path.exists(os.path.join(m["path"], "_SUCCESS"))
         )
     except (json.JSONDecodeError, KeyError, OSError):
         return False
@@ -86,6 +95,7 @@ def write_stage(
         "stage": stage,
         "path": path,
         "input_snapshot": input_snapshot,
+        "format": PIPELINE_FORMAT,
         "rows": int(sum(p["rows"] for p in lineage)),
         "partitions": len(lineage),
         "partition_lineage": lineage,
@@ -100,72 +110,10 @@ def read_stage(spark: SparkSession, out_dir: str, stage: str) -> DataFrame:
     return spark.read.parquet(os.path.join(out_dir, stage))
 
 
-def write_stage_bucketed(
-    df: DataFrame,
-    out_dir: str,
-    table: str,
-    input_snapshot: str,
-    bucket_by: list[str],
-    n_buckets: int = 32,
-    sort_by: list[str] | None = None,
-) -> dict:
-    """Materialize a stage as a BUCKETED external table (hash-bucketed
-    files + catalog metadata).
-
-    The scale rationale (SURVEY.md §4): two tables bucketed on the same
-    keys with the same bucket count join WITHOUT a shuffle — the scan
-    itself reports hashpartitioning(bucket_by, n_buckets), so repeated
-    downstream joins/groupBys on those keys (the norm for kg.edges on
-    src) amortize ONE write-side repartition across every future read.
-    On a real deployment this is Iceberg's bucket(N, col) partition
-    transform.  Plain write_stage is the default; use this for tables
-    consumed by many co-located joins.
-
-    The catalog entry is namespaced by a short hash of out_dir: two runs
-    with different out_dirs (or concurrent pipelines sharing a metastore)
-    would otherwise clobber each other's bare-named table — the overwrite
-    repoints the catalog at the new path while the old run's manifest
-    still claims its stage complete.  The manifest records the qualified
-    name; read back via spark.table(manifest["table"]).
-    """
-    import hashlib
-
-    path = os.path.join(out_dir, table)
-    ns = hashlib.sha1(os.path.abspath(out_dir).encode()).hexdigest()[:8]
-    qualified = f"{table}_{ns}"
-    t0 = time.monotonic()
-    writer = (
-        df.write.mode("overwrite")
-        .option("path", path)
-        .bucketBy(n_buckets, *bucket_by)
-    )
-    writer = writer.sortBy(*(sort_by or bucket_by))
-    writer.format("parquet").saveAsTable(qualified)
-    elapsed = time.monotonic() - t0
-    spark = df.sparkSession
-    written = spark.table(qualified)
-    lineage = partition_lineage(written)
-    manifest = {
-        "stage": table,
-        "path": path,
-        "table": qualified,
-        "bucket_by": bucket_by,
-        "n_buckets": n_buckets,
-        "input_snapshot": input_snapshot,
-        "rows": int(sum(p["rows"] for p in lineage)),
-        "partitions": len(lineage),
-        "partition_lineage": lineage,
-        "wall_sec": round(elapsed, 3),
-    }
-    with open(_manifest_path(out_dir, table), "w") as f:
-        json.dump(manifest, f, indent=1)
-    return manifest
-
-
 __all__ = [
     "partition_lineage",
     "write_stage",
-    "write_stage_bucketed",
     "read_stage",
     "stage_is_complete",
+    "PIPELINE_FORMAT",
 ]

@@ -14,10 +14,8 @@ per-row SQLite probe loop; here it is ONE declarative join:
 The catalog is a dimension (≪ probe side) ⇒ broadcast hash join: zero
 shuffle of the 10^12-row probe side, and broadcast is inherently
 skew-immune (a Zipfian-hot key never concentrates on one reducer because
-there is no reducer).  For the case where the catalog outgrows broadcast
-(no longer a dim), link_surfaces_salted provides the explicit
-salted shuffle-join path required by the north_rule, with a unit test
-proving salted ≡ broadcast results.
+there is no reducer).  A catalog that outgrows the broadcast gate falls
+back to a shuffle join, where AQE skew-splits hot keys.
 """
 
 from __future__ import annotations
@@ -29,13 +27,6 @@ from kg.extract import TOOL_SURFACE_PREFIX
 
 MINTED_PREFIX = "new:"
 TOOL_ENTITY_PREFIX = "tool:"
-# Opt-in fixed-width minted ids ("new:" + md5 hex, 36 chars) instead of
-# "new:" + normalized surface (unbounded).  The surface is carried once in
-# the vocabulary dim (link_vocab) for node display names; every downstream
-# exchange (link rejoins → CC → materialize) then moves a fixed 36-byte id
-# instead of arbitrary-length text.  Measured on the 8M corpus before
-# defaulting — see BENCH/BASELINE.md round 5.
-HASHED_MINT_CONF = "spark.kg.link.hashedMintedIds"
 
 
 def norm_key(col: Column) -> Column:
@@ -62,32 +53,18 @@ def build_link_index(catalog: DataFrame) -> DataFrame:
     )
 
 
-def _mint(key_col: Column, catalog_id: Column, hashed: bool = False) -> Column:
+def _mint(key_col: Column, catalog_id: Column) -> Column:
     """Miss branch (J3 left-outer): deterministic content-derived ids —
     never a global counter (reference uses ++maxDbId, which does not
-    distribute; SURVEY.md §7 risk 1).  hashed=True mints fixed-width
-    "new:" + md5(key) (tool ids are already bounded and stay readable)."""
+    distribute; SURVEY.md §7 risk 1)."""
     tool_name = F.regexp_replace(key_col, f"^{TOOL_SURFACE_PREFIX}", "")
-    minted = (
-        F.concat(F.lit(MINTED_PREFIX), F.md5(key_col))
-        if hashed
-        else F.concat(F.lit(MINTED_PREFIX), key_col)
-    )
     return (
         F.when(catalog_id.isNotNull(), catalog_id)
         .when(
             key_col.startswith(TOOL_SURFACE_PREFIX),
             F.concat(F.lit(TOOL_ENTITY_PREFIX), tool_name),
         )
-        .otherwise(minted)
-    )
-
-
-def _resolve_hashed(df: DataFrame, hashed_ids: bool | None) -> bool:
-    if hashed_ids is not None:
-        return hashed_ids
-    return (
-        str(df.sparkSession.conf.get(HASHED_MINT_CONF, "false")).lower() == "true"
+        .otherwise(F.concat(F.lit(MINTED_PREFIX), key_col))
     )
 
 
@@ -96,7 +73,6 @@ def link_surfaces(
     catalog: DataFrame,
     surface_col: str = "surface",
     broadcast_threshold: int | None = None,
-    hashed_ids: bool | None = None,
 ) -> DataFrame:
     """Probe (J3): map each distinct surface to an entity_id.
 
@@ -106,12 +82,10 @@ def link_surfaces(
 
     The index broadcast is size-gated on the exploded alias count (a cheap
     scan that upper-bounds the index rows); an over-threshold catalog falls
-    back to a shuffle join — or use link_surfaces_salted when the hot-key
-    skew of a shuffle join is the concern.
+    back to a shuffle join.
     """
     from kg.canonicalize import _fits_broadcast
 
-    hashed = _resolve_hashed(surfaces, hashed_ids)
     index = build_link_index(catalog)
     aliases = catalog.select(F.explode("aliases").alias("a"))
     if _fits_broadcast(aliases, broadcast_threshold):
@@ -122,7 +96,7 @@ def link_surfaces(
     return joined.select(
         "surface",
         "blocking_key",
-        _mint(F.col("blocking_key"), F.col("entity_id"), hashed).alias("entity_id"),
+        _mint(F.col("blocking_key"), F.col("entity_id")).alias("entity_id"),
         F.col("entity_id").isNull().alias("is_minted"),
     )
 
@@ -131,27 +105,22 @@ def link_vocab(
     raw_triples: DataFrame,
     catalog: DataFrame,
     broadcast_threshold: int | None = None,
-    hashed_ids: bool | None = None,
 ) -> DataFrame:
     """The (surface, blocking_key, entity_id, is_minted) vocabulary of a
-    raw-triple stream — the dim that lets hashed minted ids stay
-    resolvable to a display surface (build_nodes minted_names).  Pass the
-    result to link_triples(surface_map=...) so the linking work happens
+    raw-triple stream.  A caller that also inspects the vocabulary passes
+    it to link_triples(surface_map=...) so the linking work happens
     once."""
     surf = (
         raw_triples.select(F.col("subj_surface").alias("surface"))
         .unionByName(raw_triples.select(F.col("obj_surface").alias("surface")))
     )
-    return link_surfaces(
-        surf, catalog, broadcast_threshold=broadcast_threshold, hashed_ids=hashed_ids
-    )
+    return link_surfaces(surf, catalog, broadcast_threshold=broadcast_threshold)
 
 
 def link_triples(
     raw_triples: DataFrame,
     catalog: DataFrame,
     broadcast_threshold: int | None = None,
-    hashed_ids: bool | None = None,
     surface_map: DataFrame | None = None,
 ) -> DataFrame:
     """Rewrite raw surface triples to entity-id triples.
@@ -166,19 +135,12 @@ def link_triples(
     # The map is built by link_surfaces unconditionally: its probe side is
     # the DISTINCT vocabulary (each key once ⇒ no probe-side skew to
     # salt), and its index side is already gated inside link_surfaces.
-    # link_surfaces_salted remains for callers probing NON-distinct
-    # surface streams with Zipfian keys.  A caller that already holds the
-    # vocabulary (link_vocab — e.g. the hashed-id pipeline, which also
-    # feeds it to build_nodes) passes it in to avoid recomputing.
+    # A caller that already holds the vocabulary (link_vocab) passes it
+    # in to avoid recomputing.
     mapped = (
         surface_map
         if surface_map is not None
-        else link_vocab(
-            raw_triples,
-            catalog,
-            broadcast_threshold=broadcast_threshold,
-            hashed_ids=hashed_ids,
-        )
+        else link_vocab(raw_triples, catalog, broadcast_threshold=broadcast_threshold)
     )
     # persist + EAGER fill: the map feeds TWO exchanges (subj + obj) whose
     # plans differ by rename, so ReuseExchange can't kick in; worse,
@@ -226,55 +188,12 @@ def link_triples(
     )
 
 
-# ---------------------------------------------------------------------------
-# Explicit skew path (north_rule: "partitioning / shuffle / skew handled
-# explicitly").  Used when the build side is too large to broadcast.
-# ---------------------------------------------------------------------------
-def link_surfaces_salted(
-    surfaces: DataFrame,
-    catalog: DataFrame,
-    surface_col: str = "surface",
-    salt_buckets: int = 16,
-    hashed_ids: bool | None = None,
-) -> DataFrame:
-    """Salted shuffle hash join: probe side gets salt = pmod(xxhash64(row
-    identity), K); build side is exploded ×K so every (key, salt) pair
-    exists.  A Zipfian-hot blocking key is thereby spread over K reducers
-    instead of one (SURVEY.md §2.3 note on J2/J3 at 10^12 scale).
-
-    Produces the same (surface → entity_id) mapping as link_surfaces —
-    asserted by tests/test_link.py::test_salted_equals_broadcast.
-    """
-    hashed = _resolve_hashed(surfaces, hashed_ids)
-    index = build_link_index(catalog)
-    salted_index = index.withColumn(
-        "salt", F.explode(F.sequence(F.lit(0), F.lit(salt_buckets - 1)))
-    )
-    probe = (
-        surfaces.select(F.col(surface_col).alias("surface"))
-        .distinct()
-        .withColumn("blocking_key", norm_key(F.col("surface")))
-        .withColumn("salt", F.pmod(F.xxhash64("surface"), F.lit(salt_buckets)).cast("int"))
-    )
-    joined = probe.hint("shuffle_hash").join(
-        salted_index, ["blocking_key", "salt"], "left"
-    )
-    return joined.select(
-        "surface",
-        "blocking_key",
-        _mint(F.col("blocking_key"), F.col("entity_id"), hashed).alias("entity_id"),
-        F.col("entity_id").isNull().alias("is_minted"),
-    )
-
-
 __all__ = [
     "norm_key",
     "build_link_index",
     "link_surfaces",
-    "link_surfaces_salted",
     "link_triples",
     "link_vocab",
     "MINTED_PREFIX",
     "TOOL_ENTITY_PREFIX",
-    "HASHED_MINT_CONF",
 ]

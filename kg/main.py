@@ -4,15 +4,14 @@ Reference analog: Main.java:17-31 — a flagged-option CLI that wires the
 source connection, output store, optional interaction file, and a
 progress-bar switch, then runs the whole import and logs a summary.
 The Spark translation: parquet inputs instead of a MySQL connection,
-a parquet/bucketed-table out_dir instead of the neo4j path, and the
+a parquet out_dir instead of the neo4j path, and the
 import summary as one machine-readable JSON line on stdout (the
 reference logs it at ReactomeBatchImporter.java:156-171).
 
 Usage (spark-submit or plain python):
 
     python -m kg.main --transcripts t.parquet --catalog c.parquet \
-        --alias-pairs a.parquet --out ./kg_out [--resume] [--bar] \
-        [--extract-impl auto|sql|pandas] [--cpus 32]
+        --alias-pairs a.parquet --out ./kg_out [--resume] [--bar] [--cpus 32]
 """
 
 from __future__ import annotations
@@ -36,8 +35,6 @@ def build_parser() -> argparse.ArgumentParser:
                     help="reuse completed stage outputs (manifest check; Main.java has no analog — the reference always re-imports)")
     ap.add_argument("--bar", action="store_true",
                     help="live progress bars on stderr (ProgressBarUtils analog)")
-    ap.add_argument("--extract-impl", default=None, choices=["auto", "sql", "pandas"],
-                    help="override spark.kg.extract.impl")
     ap.add_argument("--cpus", type=int, default=None, help="local[N] parallelism")
     ap.add_argument("--app-name", default="kg-import")
     return ap
@@ -53,8 +50,6 @@ def run(argv: list[str] | None = None, spark=None) -> dict:
     if spark is None:
         kw = {"parallelism": args.cpus} if args.cpus else {}
         spark = get_spark(args.app_name, **kw)
-    if args.extract_impl:
-        spark.conf.set("spark.kg.extract.impl", args.extract_impl)
 
     from kg.pipeline import run_pipeline_materialized
     from kg.progress import ProgressReporter

@@ -39,8 +39,7 @@ def merge_upsert(target: DataFrame, updates: DataFrame, keys: list[str]) -> Data
     Columns must match (unionByName).  Plan shape: ONE left-anti join on
     the keys (target side pruned to non-matched) + union — the big
     (target) side shuffles once on the keys; with both sides bucketed on
-    the keys (kg/lineage.write_stage_bucketed) even that shuffle
-    disappears.
+    the keys (a bucketed table write) even that shuffle disappears.
     """
     untouched = target.join(updates.select(*keys), keys, "left_anti")
     return untouched.unionByName(updates)

@@ -8,19 +8,19 @@ canonical_triples ──Stage4──▶ kg.nodes / kg.edges (+ QA + manifests)
 Two run modes:
 - run_pipeline(...): in-memory DataFrames end to end (tests, entry()).
 - run_pipeline_materialized(...): every stage lands in parquet with a
-  manifest; completed stages (same input snapshot) are skipped on rerun —
-  the checkpointed-resumability contract of the north_rule.
+  manifest; completed stages (same input snapshot and pipeline format,
+  kg.lineage.PIPELINE_FORMAT) are skipped on rerun — the
+  checkpointed-resumability contract of the north_rule.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from kg.canonicalize import apply_canonical_map, connected_components
 from kg.extract import extract_triples
 from kg.lineage import read_stage, stage_is_complete, write_stage
-from kg.link import HASHED_MINT_CONF, MINTED_PREFIX, link_triples, link_vocab
+from kg.link import link_triples
 from kg.materialize import (
     build_edges,
     build_nodes,
@@ -33,33 +33,6 @@ from kg.materialize import (
 )
 
 STAGES = ("raw_triples", "linked_triples", "canonical_triples", "nodes", "edges")
-
-
-def _hashed_mint_on(spark: SparkSession) -> bool:
-    return str(spark.conf.get(HASHED_MINT_CONF, "false")).lower() == "true"
-
-
-def _minted_names(vocab: DataFrame) -> DataFrame:
-    """(canonical_id, minted_name) dim from the linking vocabulary — lets
-    build_nodes show the surface behind a hashed minted id.
-
-    r6 (ADVICE r5): the vocabulary is distinct per raw SURFACE, so two
-    surfaces normalizing to one blocking key ('[[Foo]]' vs '[[foo]]')
-    yield the same (entity_id, blocking_key) twice — without the
-    .distinct() the build_nodes left join fanned the node table out to
-    duplicate rows per minted id.  Tool-surface misses are also
-    is_minted (their entity_id is 'tool:<name>'); they are excluded so
-    plain and hashed modes show the same prefix-stripped tool display
-    name."""
-    return (
-        vocab.where("is_minted")
-        .where(F.col("entity_id").startswith(MINTED_PREFIX))
-        .select(
-            F.col("entity_id").alias("canonical_id"),
-            F.col("blocking_key").alias("minted_name"),
-        )
-        .distinct()
-    )
 
 
 def run_pipeline(
@@ -82,15 +55,7 @@ def run_pipeline(
     raw = extract_triples(transcripts).persist()
     raw.count()  # eager fill: see link_triples — concurrent broadcast
     # threads would otherwise recompute the extraction UDF per exchange
-    if _hashed_mint_on(spark):
-        vocab = link_vocab(raw, catalog).persist()
-        vocab.count()  # eager: vocab feeds both linking and minted_names
-        linked = link_triples(raw, catalog, surface_map=vocab)
-        minted = _minted_names(vocab)
-    else:
-        vocab = None
-        linked = link_triples(raw, catalog)
-        minted = None
+    linked = link_triples(raw, catalog)
     mapping = connected_components(alias_pairs)  # has its own actions (fixpoint)
     canonical = apply_canonical_map(linked, mapping).persist()
     # TrackingObjects analog: the run's Person/InstanceEdit wiring becomes
@@ -107,7 +72,6 @@ def run_pipeline(
             "checksum": input_snapshot or "",
             "engine": f"spark-{spark.version}",
         },
-        minted_names=minted,
     )
     return {
         "raw_triples": raw,
@@ -116,21 +80,17 @@ def run_pipeline(
         "canonical_triples": canonical,
         "nodes": nodes,
         "edges": edges,
-        "link_vocab": vocab,
     }
 
 
 def release_pipeline(result: dict) -> None:
-    """Unpersist the DataFrames run_pipeline caches (raw_triples,
-    canonical_triples, and link_vocab in hashed-minted-id mode).
-    Call once downstream consumption is finished;
+    """Unpersist the DataFrames run_pipeline caches (raw_triples and
+    canonical_triples).  Call once downstream consumption is finished;
     long-lived drivers that run many pipelines without releasing
     accumulate cached blocks (the materialized runner needs no release —
     its stages live in parquet, not the block manager)."""
-    for key in ("raw_triples", "canonical_triples", "link_vocab"):
-        df = result.get(key)
-        if df is not None:
-            df.unpersist()
+    for key in ("raw_triples", "canonical_triples"):
+        result[key].unpersist()
 
 
 def run_qa(nodes: DataFrame, edges: DataFrame) -> dict[str, int]:
@@ -180,19 +140,7 @@ def run_pipeline_materialized(
         return read_stage(spark, out_dir, name)
 
     raw = _stage("raw_triples", lambda: extract_triples(transcripts))
-    if _hashed_mint_on(spark):
-        # vocab is its own resumable stage: the minted-name dim must
-        # survive a crash between linking and node building (the hashed id
-        # cannot be inverted back to its surface).
-        vocab = _stage("link_vocab", lambda: link_vocab(raw, catalog))
-        linked = _stage(
-            "linked_triples",
-            lambda: link_triples(raw, catalog, surface_map=vocab),
-        )
-        minted = _minted_names(vocab)
-    else:
-        linked = _stage("linked_triples", lambda: link_triples(raw, catalog))
-        minted = None
+    linked = _stage("linked_triples", lambda: link_triples(raw, catalog))
     mapping = _stage("mapping", lambda: connected_components(alias_pairs))
     canonical = _stage(
         "canonical_triples", lambda: apply_canonical_map(linked, mapping)
@@ -210,7 +158,6 @@ def run_pipeline_materialized(
                 "checksum": snap,
                 "engine": f"spark-{spark.version}",
             },
-            minted_names=minted,
         ),
     )
     edges = _stage(

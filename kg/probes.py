@@ -1,6 +1,6 @@
 """Bounded driver-side row-count probes (r6).
 
-Several operators dispatch on input size (extract auto impl, the CC
+Several operators dispatch on input size (the extract path, the CC
 driver/distributed split, broadcast gates).  The r5 probe was always a
 ``df.limit(thr + 1).count()`` job — bounded, but a full Spark job with
 scheduler latency, measured as a visible slice of the pipeline wall at

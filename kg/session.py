@@ -15,6 +15,14 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _driver_memory_default(phys_bytes: int) -> str:
+    """Driver heap for a host with ``phys_bytes`` of RAM: half of it,
+    leaving the other half for JVM off-heap use and the Python workers;
+    capped at 24g, never below 1g."""
+    gib = phys_bytes // 2**30
+    return f"{max(1, min(24, gib // 2))}g"
+
+
 def get_spark(
     app_name: str = "kg",
     parallelism: int | None = None,
@@ -24,6 +32,8 @@ def get_spark(
     """Build (or fetch) a SparkSession.
 
     parallelism: local[N] thread count; defaults to $SPARK_GRAFT_CPUS or 32.
+    The driver heap is $SPARK_GRAFT_DRIVER_MEM, else half of physical
+    memory capped at 24g (_driver_memory_default).
     shuffle_partitions: defaults to parallelism (local rule of thumb —
     on a real cluster this would be ~2-3x total cores, or left to AQE
     coalescing which is enabled here).
@@ -32,6 +42,9 @@ def get_spark(
         parallelism = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     if shuffle_partitions is None:
         shuffle_partitions = max(parallelism, 8)
+    driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _driver_memory_default(
+        os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    )
 
     # Make the kg package importable on Python workers regardless of the
     # driver script's cwd (cluster deployments ship it via --py-files;
@@ -50,7 +63,7 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        .config("spark.driver.memory", driver_mem)
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.executorEnv.PYTHONPATH", worker_pythonpath)

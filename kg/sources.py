@@ -1,4 +1,4 @@
-"""Input connectors (SURVEY.md §2.1 S1/S6/S7/S8 analogs).
+"""Input connectors (SURVEY.md §2.1 S1/S6/S8 analogs).
 
 The reference reads from MySQL (GKInstance rows), tab-separated resource
 files (trivialMolecules.txt, ReactomeBatchImporter.java:118-131), and a
@@ -63,46 +63,4 @@ def read_catalog(spark: SparkSession, path: str, fmt: str = "parquet") -> DataFr
     raise ValueError(f"unsupported catalog format: {fmt}")
 
 
-def read_catalog_jdbc(
-    spark: SparkSession,
-    url: str,
-    table: str,
-    partition_column: str | None = None,
-    num_partitions: int = 8,
-    lower_bound: int | None = None,
-    upper_bound: int | None = None,
-    **options: str,
-) -> DataFrame:
-    """S7 analog of the reference's SQLite interactions DB probe
-    (InteractionImporter.java:284-302) as a DECLARATIVE parallel read —
-    the reference loops per-accession SQL queries; Spark's JDBC source
-    issues one partitioned scan instead.
-
-    partition_column/lower_bound/upper_bound/num_partitions split the
-    table into range predicates executed in parallel — without them the
-    whole table arrives through ONE connection on one executor, which is
-    the classic JDBC-at-scale mistake.  Column projection and filter
-    pushdown reach the remote engine via the JDBC dialect.
-
-    The resulting frame is raw (remote schema); project it to
-    CATALOG_SCHEMA columns at the call site.  Sandbox note: no JDBC
-    driver jars ship in this environment, so this path is exercised only
-    against a real database deployment — the parquet/TSV sources above
-    are the tested stand-ins (SURVEY.md §2.1 mapping).
-    """
-    reader = spark.read.format("jdbc").option("url", url).option("dbtable", table)
-    if partition_column is not None:
-        if lower_bound is None or upper_bound is None:
-            raise ValueError("partition_column requires lower_bound and upper_bound")
-        reader = (
-            reader.option("partitionColumn", partition_column)
-            .option("lowerBound", str(lower_bound))
-            .option("upperBound", str(upper_bound))
-            .option("numPartitions", str(num_partitions))
-        )
-    for k, v in options.items():
-        reader = reader.option(k, v)
-    return reader.load()
-
-
-__all__ = ["read_transcripts", "read_catalog", "read_catalog_jdbc"]
+__all__ = ["read_transcripts", "read_catalog"]

@@ -7,10 +7,6 @@ Streaming:
 
 - transcript_stream: file-source stream over a growing parquet directory
   (stand-in for Kafka/Iceberg-CDC at deployment).
-- windowed_mention_counts: a native streaming aggregation — watermarked
-  event-time windows over mention counts (late turns beyond the watermark
-  are dropped, exactly the at-most-once-per-window semantics wanted for
-  monitoring dashboards).
 - run_incremental: foreachBatch pipeline — each micro-batch runs the
   batch stages (extract → link → canonicalize), appends canonical
   triples partitioned by epoch, and COMPACTS the edge table
@@ -42,28 +38,6 @@ def transcript_stream(spark: SparkSession, input_dir: str) -> DataFrame:
         spark.readStream.schema(TRANSCRIPTS_SCHEMA)
         .option("maxFilesPerTrigger", 4)
         .parquet(input_dir)
-    )
-
-
-def windowed_mention_counts(
-    stream: DataFrame, window: str = "10 minutes", watermark: str = "30 minutes"
-) -> DataFrame:
-    """Watermarked event-time windowed mention counts (pure built-ins —
-    regexp_extract_all is streaming-safe, no Python)."""
-    from kg.extract import MENTION_PAT_JAVA, NONBLANK_RE
-
-    m = (
-        stream.withWatermark("ts", watermark)
-        .select(
-            "ts",
-            F.explode(
-                F.regexp_extract_all("text", F.lit(MENTION_PAT_JAVA), 1)
-            ).alias("surface"),
-        )
-        .where(F.col("surface").rlike(NONBLANK_RE))
-    )
-    return m.groupBy(F.window("ts", window), "surface").agg(
-        F.count(F.lit(1)).alias("n_mentions")
     )
 
 
@@ -235,109 +209,4 @@ def run_incremental(
     }
 
 
-__all__ = ["transcript_stream", "windowed_mention_counts", "run_incremental"]
-
-
-# ---------------------------------------------------------------------------
-# Stateful incremental extraction (applyInPandasWithState)
-# ---------------------------------------------------------------------------
-def stateful_extract(stream: DataFrame) -> DataFrame:
-    """Per-conversation stateful triple extraction over a live stream.
-
-    Unlike run_incremental (which re-groups per micro-batch and relies on
-    whole conversations arriving within one file), this keeps the
-    cross-turn chain (rule R2) alive ACROSS micro-batches: the state per
-    conv_id is the last mention seen (turn_idx, span, surface), so a
-    conversation whose turns arrive over many triggers still emits the
-    same triples as the batch extractor.
-
-    Assumes turns of one conversation arrive in turn_idx order across
-    triggers (append-only ordered feed — the transcript-log case); within
-    a trigger they are sorted explicitly.
-    """
-    import pandas as pd
-
-    from kg.extract import (
-        PRED_CO_OCCURS,
-        PRED_FOLLOWED_BY,
-        PRED_PRODUCED_BY,
-        TOOL_SURFACE_PREFIX,
-        _turn_mentions,
-    )
-
-    state_schema = "turn_idx int, span int, surface string"
-
-    def fn(key, pdfs, state):
-        conv_id = key[0]
-        prev_last = tuple(state.get) if state.exists else None
-        out = []
-        for pdf in pdfs:
-            pdf = pdf.sort_values("turn_idx", kind="mergesort")
-            for row in pdf.itertuples(index=False):
-                ms = _turn_mentions(row.text)
-                for (s1, m1), (_s2, m2) in zip(ms, ms[1:]):
-                    out.append((conv_id, int(row.turn_idx), int(s1), m1,
-                                PRED_CO_OCCURS, m2))
-                if prev_last is not None and ms:
-                    pt, ps, psurf = prev_last
-                    out.append((conv_id, int(pt), int(ps), psurf,
-                                PRED_FOLLOWED_BY, ms[0][1]))
-                if row.role == "tool" and row.tool:
-                    for s, m in ms:
-                        out.append((conv_id, int(row.turn_idx), int(s), m,
-                                    PRED_PRODUCED_BY, TOOL_SURFACE_PREFIX + row.tool))
-                if ms:
-                    prev_last = (int(row.turn_idx), int(ms[-1][0]), ms[-1][1])
-        if prev_last is not None:
-            state.update(prev_last)
-        yield pd.DataFrame(
-            out,
-            columns=["conv_id", "turn_idx", "span_start",
-                     "subj_surface", "pred", "obj_surface"],
-        )
-
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    from kg.schema import RAW_TRIPLES_SCHEMA
-
-    return (
-        stream.select("conv_id", "turn_idx", "role", "text", "tool")
-        .groupBy("conv_id")
-        .applyInPandasWithState(
-            fn, RAW_TRIPLES_SCHEMA, state_schema, "append",
-            GroupStateTimeout.NoTimeout,
-        )
-    )
-
-
-def streaming_exact_dedup(
-    stream: DataFrame,
-    key_cols: tuple[str, ...] = (),
-    content_col: str = "text",
-    watermark: str = "1 hour",
-) -> DataFrame:
-    """Streaming exact dedup: drop records whose content hash was already
-    seen (within the watermark horizon).
-
-    dropDuplicatesWithinWatermark keys on ``(*key_cols, content_hash)``:
-    with the default ``key_cols=()`` dedup is GLOBAL over content (any
-    re-delivered identical payload is emitted once — the streaming face
-    of exact_dedup, kg/ops/dedup.py); passing key columns SCOPES the
-    dedup, e.g. ``key_cols=("conv_id",)`` keeps one copy of identical
-    text per conversation rather than per stream.  (The parameter was
-    previously declared but unused — ADVICE r3.)  State is one
-    (key, hash → timestamp) entry per distinct key inside the horizon
-    and is evicted by the watermark, so state size is bounded by the
-    horizon, not the stream length — the property that keeps this
-    runnable forever on a 10^12-row feed.  Exactly-once replay of a
-    micro-batch re-deduplicates to the same output (hash equality is
-    deterministic, unlike sampling-based dedup).
-    """
-    hashed = stream.withColumn(
-        # 16-byte digest key: halves both the dedup state entry and the
-        # exchange bytes vs the 32-char hex form (VERDICT r4 item 4)
-        "content_hash", F.unhex(F.md5(F.col(content_col).cast("binary")))
-    ).withWatermark("ts", watermark)
-    return hashed.dropDuplicatesWithinWatermark(
-        [*key_cols, "content_hash"]
-    ).drop("content_hash")
+__all__ = ["transcript_stream", "run_incremental"]

@@ -1,5 +1,5 @@
 """Stage-1 extraction unit tests (SURVEY.md §5: extraction UDF on a
-hand-written conversation; per-turn text-equality invariant)."""
+hand-written conversation; SQL ≡ pandas implementations)."""
 
 from __future__ import annotations
 
@@ -7,7 +7,7 @@ import datetime as dt
 
 import pandas as pd
 
-from kg.extract import extract_conversation, extract_mentions, extract_triples, round_trip_text
+from kg.extract import extract_conversation, extract_mentions, extract_triples
 from kg.schema import TRANSCRIPTS_SCHEMA
 
 HAND_CONV = pd.DataFrame(
@@ -54,20 +54,6 @@ def test_spark_extraction_matches_local(spark):
     assert sorted(map(tuple, got[key].values.tolist())) == sorted(
         map(tuple, exp[key].values.tolist())
     )
-
-
-def test_per_turn_text_equality_invariant(spark, transcripts_df, transcripts_pdf):
-    """BASELINE.json input_hint: round-trip through the Arrow stage must
-    preserve every turn's text under stable (conv_id, turn_idx) order."""
-    back = (
-        round_trip_text(transcripts_df)
-        .orderBy("conv_id", "turn_idx")
-        .toPandas()
-    )
-    orig = transcripts_pdf.sort_values(["conv_id", "turn_idx"]).reset_index(drop=True)
-    assert back["text"].tolist() == orig["text"].tolist()
-    assert back["conv_id"].tolist() == orig["conv_id"].tolist()
-    assert back["turn_idx"].tolist() == orig["turn_idx"].tolist()
 
 
 NASTY_TURNS = [
@@ -156,14 +142,14 @@ def test_mentions_builtin_matches_udf(spark, transcripts_df, transcripts_pdf):
 
 
 def test_auto_impl_dispatches_on_size(spark, transcripts_df):
-    """auto = pandas under the turn threshold, sql above (bounded probe)."""
+    """pandas under the turn threshold, sql above (bounded probe)."""
     from kg.extract import extract_triples
 
     def plan(df) -> str:
         return df._jdf.queryExecution().optimizedPlan().toString()
 
     spark.conf.set("spark.kg.extract.autoThresholdTurns", "1000000000")
-    assert "MapInPandas" in plan(extract_triples(transcripts_df, impl="auto"))
+    assert "MapInPandas" in plan(extract_triples(transcripts_df))
     spark.conf.set("spark.kg.extract.autoThresholdTurns", "1")
-    assert "MapInPandas" not in plan(extract_triples(transcripts_df, impl="auto"))
+    assert "MapInPandas" not in plan(extract_triples(transcripts_df))
     spark.conf.unset("spark.kg.extract.autoThresholdTurns")

@@ -1,15 +1,19 @@
-"""Property-based fuzz: the Spark-side extractor (kg/extract) and the
-oracle (kg/oracle) are INDEPENDENT implementations of rules R1/R2/R3 —
-hypothesis hammers them with adversarial conversations (unicode, nested
-brackets, blanks, adjacent mentions, shuffled row order)."""
+"""Property-based fuzz: the extractors (kg/extract — the pandas block
+extractor and the pure-JVM SQL plan) and the oracle (kg/oracle) are
+INDEPENDENT implementations of rules R1/R2/R3 — hypothesis hammers them
+with adversarial conversations (unicode, nested brackets, blanks,
+adjacent mentions, shuffled row order)."""
 
 from __future__ import annotations
 
 import pandas as pd
 from hypothesis import given, settings, strategies as st
 
-from kg.extract import extract_conversation
+from kg.extract import extract_conversation, extract_triples_sql
 from kg.oracle import oracle_extract
+from kg.schema import RAW_TRIPLES_SCHEMA
+
+TRIPLE_COLS = [f.name for f in RAW_TRIPLES_SCHEMA.fields]
 
 surface = st.text(
     alphabet=st.characters(blacklist_categories=("Cs",), blacklist_characters="]"),
@@ -46,14 +50,26 @@ def test_extractor_matches_oracle(pdf, rnd):
     # shuffle rows: extraction must be order-stable under (conv_id, turn_idx)
     shuffled = pdf.sample(frac=1.0, random_state=rnd.randint(0, 10**6))
     got = extract_conversation(shuffled)
-    exp = pd.DataFrame(
-        oracle_extract(pdf),
-        columns=["conv_id", "turn_idx", "span_start", "subj_surface", "pred", "obj_surface"],
-    )
-    key = list(exp.columns)
-    a = sorted(map(tuple, got[key].values.tolist()))
-    b = sorted(map(tuple, exp[key].values.tolist()))
+    exp = pd.DataFrame(oracle_extract(pdf), columns=TRIPLE_COLS)
+    a = sorted(map(tuple, got[TRIPLE_COLS].values.tolist()))
+    b = sorted(map(tuple, exp[TRIPLE_COLS].values.tolist()))
     assert a == b
+
+
+@settings(max_examples=40, deadline=None, derandomize=True)
+@given(st.lists(conversation(), min_size=1, max_size=25))
+def test_sql_extractor_matches_oracle(spark, convs):
+    """The JVM extract path (batch-large and every build above the size
+    gate) on many fuzzed conversations per Spark job, one conv_id each."""
+    pdf = pd.concat(
+        [c.assign(conv_id=f"c{i:02d}") for i, c in enumerate(convs)],
+        ignore_index=True,
+    )
+    df = spark.createDataFrame(
+        pdf, "conv_id string, turn_idx int, role string, text string, tool string"
+    )
+    got = sorted(tuple(r) for r in extract_triples_sql(df).select(*TRIPLE_COLS).collect())
+    assert got == sorted(oracle_extract(pdf))
 
 
 def test_asof_join_matches_pandas_merge_asof(spark):

@@ -37,4 +37,4 @@ def test_cli_parser_defaults():
     ns = ap.parse_args(
         ["--transcripts", "t", "--catalog", "c", "--alias-pairs", "a", "--out", "o"]
     )
-    assert not ns.resume and not ns.bar and ns.extract_impl is None
+    assert not ns.resume and not ns.bar and ns.cpus is None

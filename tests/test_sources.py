@@ -37,19 +37,3 @@ def test_catalog_tsv(spark, tmp_path):
     assert got["cat:Q1"]["aliases"] == ["Alpha Beta", "ALPHA BETA"]
     assert got["cat:Q1"]["blocking_key"] == "alpha beta"
     assert got["cat:Q2"]["freq_hint"] == 1.0
-
-
-def test_jdbc_reader_argument_contract(spark):
-    """read_catalog_jdbc builds a partitioned JDBC scan; the sandbox has
-    no driver jars, so only the argument contract is testable here —
-    partition_column without range bounds must fail fast (an unbounded
-    single-connection scan is the JDBC-at-scale mistake it prevents)."""
-    import pytest
-
-    from kg.sources import read_catalog_jdbc
-
-    with pytest.raises(ValueError, match="lower_bound"):
-        read_catalog_jdbc(
-            spark, "jdbc:sqlite:/tmp/x.db", "interactions",
-            partition_column="id",
-        )

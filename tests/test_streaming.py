@@ -1,5 +1,5 @@
 """Streaming/incremental tests: availableNow drain ≡ batch pipeline;
-watermarked windowed agg; checkpoint resume picks up only new files."""
+checkpoint resume picks up only new files."""
 
 from __future__ import annotations
 
@@ -8,7 +8,7 @@ import os
 import pandas as pd
 
 from kg.pipeline import run_pipeline
-from kg.streaming import run_incremental, transcript_stream, windowed_mention_counts
+from kg.streaming import run_incremental
 
 
 def _edges_key(df) -> pd.DataFrame:
@@ -106,69 +106,6 @@ def test_incremental_alias_dir_refreshes_between_batches(spark, tmp_path):
     assert ("new:w", "new:y") not in e2  # the stale-mapping symptom
 
 
-def test_windowed_mention_counts_memory_sink(spark, transcripts_pdf, tmp_path):
-    stream_dir = str(tmp_path / "feed3")
-    _write_chunks(transcripts_pdf, stream_dir, n_chunks=2)
-    agg = windowed_mention_counts(transcript_stream(spark, stream_dir))
-    q = (agg.writeStream.outputMode("complete").format("memory")
-         .queryName("mention_counts").trigger(availableNow=True).start())
-    q.awaitTermination()
-    out = spark.sql("SELECT sum(n_mentions) AS n FROM mention_counts").collect()[0]["n"]
-    import re
-    exp = sum(
-        1
-        for t in transcripts_pdf["text"]
-        for m in re.findall(r"\[\[(.*?)\]\]", t)
-        if m.strip()
-    )
-    assert out == exp
-
-
-def test_stateful_extract_spans_microbatches(spark, tmp_path):
-    """A conversation split ACROSS micro-batches must still chain R2
-    (followed_by) through the kept state — batch-equivalent output."""
-    import datetime as dt
-    import pandas as pd
-
-    from kg.extract import extract_conversation
-    from kg.streaming import stateful_extract, transcript_stream
-
-    rows = [
-        ("c1", 0, "user", "Start with [[Alpha]].", None),
-        ("c1", 1, "assistant", "Then [[Beta]] and [[Gamma]].", None),
-        ("c1", 2, "tool", "found [[Delta]]", "search"),
-        ("c1", 3, "user", "Finally [[Alpha]] again.", None),
-    ]
-    pdf = pd.DataFrame(rows, columns=["conv_id", "turn_idx", "role", "text", "tool"])
-    pdf["ts"] = dt.datetime(2025, 1, 1)
-    pdf["turn_idx"] = pdf["turn_idx"].astype("int32")
-    pdf["tool"] = pdf["tool"].astype("string")  # all-null slices stay string-typed
-    feed = str(tmp_path / "sfeed")
-    os.makedirs(feed, exist_ok=True)
-    # one file per turn + maxFilesPerTrigger=1-ish (4 files, default trigger
-    # reads up to 4 per trigger; force separation with availableNow + 1 file)
-    for i in range(4):
-        pdf.iloc[[i]].to_parquet(os.path.join(feed, f"f{i}.parquet"), index=False,
-                                 coerce_timestamps="us", allow_truncated_timestamps=True)
-
-    stream = (spark.readStream.schema(
-        "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp"
-    ).option("maxFilesPerTrigger", 1).parquet(feed))
-    q = (stateful_extract(stream).writeStream.outputMode("append")
-         .format("memory").queryName("stateful_out")
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
-    got = spark.sql(
-        "SELECT conv_id, turn_idx, span_start, subj_surface, pred, obj_surface "
-        "FROM stateful_out").toPandas()
-    exp = extract_conversation(pdf[["conv_id", "turn_idx", "role", "text", "tool"]])
-    key = list(exp.columns)
-    assert sorted(map(tuple, got[key].values.tolist())) == \
-           sorted(map(tuple, exp[key].values.tolist()))
-    assert ("Delta", "followed_by", "Alpha") in set(
-        zip(got.subj_surface, got.pred, got.obj_surface))
-
-
 def test_incremental_empty_input_dir(spark, catalog_df, alias_pairs_df, tmp_path):
     """No input files ⇒ zero epochs + an empty, correctly-typed edge table
     (was: PATH_NOT_FOUND on the post-drain read)."""
@@ -182,71 +119,6 @@ def test_incremental_empty_input_dir(spark, catalog_df, alias_pairs_df, tmp_path
     assert res["epochs"] == 0
     assert res["edges"].count() == 0
     assert "rel_type" in res["edges"].columns
-
-
-def test_streaming_exact_dedup(spark, tmp_path):
-    """Identical payloads re-delivered across files are emitted once;
-    distinct payloads all pass."""
-    import datetime as dt
-
-    from kg.streaming import streaming_exact_dedup, transcript_stream
-
-    stream_dir = str(tmp_path / "dedup_feed")
-    os.makedirs(stream_dir, exist_ok=True)
-    ts = dt.datetime(2025, 3, 1, 12, 0, 0)
-    rows = [
-        ("c1", 0, "user", "hello [[Spark]]", None, ts),
-        ("c1", 1, "assistant", "hi there", None, ts),
-        # exact re-delivery of c1/0's payload under a different key
-        ("c2", 0, "user", "hello [[Spark]]", None, ts),
-        ("c2", 1, "user", "something else", None, ts),
-    ]
-    pdf = pd.DataFrame(
-        rows, columns=["conv_id", "turn_idx", "role", "text", "tool", "ts"]
-    )
-    pdf["turn_idx"] = pdf["turn_idx"].astype("int32")
-    pdf["tool"] = pdf["tool"].astype("string")  # all-None would write INT32
-    pdf.to_parquet(os.path.join(stream_dir, "a.parquet"), index=False,
-                   coerce_timestamps="us", allow_truncated_timestamps=True)
-
-    out = streaming_exact_dedup(transcript_stream(spark, stream_dir))
-    q = (
-        out.writeStream.format("memory")
-        .queryName("dedup_sink")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt_dedup"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = spark.sql("SELECT text FROM dedup_sink").collect()
-    texts = sorted(r["text"] for r in got)
-    assert texts == ["hello [[Spark]]", "hi there", "something else"]
-
-    # key_cols scopes the dedup (ADVICE r3: the param was declared but
-    # unused): per-conv_id scoping keeps one copy of the duplicate text
-    # in EACH conversation
-    out2 = streaming_exact_dedup(
-        transcript_stream(spark, stream_dir), key_cols=("conv_id",)
-    )
-    q2 = (
-        out2.writeStream.format("memory")
-        .queryName("dedup_sink_scoped")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt_dedup2"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q2.awaitTermination(120)
-    got2 = spark.sql(
-        "SELECT conv_id, text FROM dedup_sink_scoped"
-    ).collect()
-    assert sorted((r["conv_id"], r["text"]) for r in got2) == [
-        ("c1", "hello [[Spark]]"),
-        ("c1", "hi there"),
-        ("c2", "hello [[Spark]]"),
-        ("c2", "something else"),
-    ]
 
 
 def test_incremental_cc_work_is_delta_proportional(
