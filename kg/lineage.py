@@ -1,13 +1,16 @@
-"""Per-partition lineage + checkpointed resumability (SURVEY.md §2.9).
+"""Per-file lineage + checkpointed resumability (SURVEY.md §2.9).
 
 Reference analog: the provenance nodes (TrackingObjects.java:34-80 —
 importer Person node, InstanceEdit with timestamp, created/author edges)
 and the coarse progress/elapsed logging (ReactomeBatchImporter.java:139,
 172-173,187-191).  Spark design per SURVEY: each stage writes a parquet
 (Iceberg-shaped) table plus a ``_manifest.json`` recording stage name,
-input snapshot id, pipeline format, per-partition row counts, and wall
-time; a restarted run skips stages whose manifest matches the current
-input snapshot and format —
+input snapshot id, pipeline format (3), the written schema, per-file row
+counts, and wall time.  The row counts come from the footers of the part
+files just written and the schema from the DataFrame written, so a write
+costs no read-back job, and read_stage reads with the recorded schema, so
+a resumed stage costs no schema-inference job.  A restarted run skips
+stages whose manifest matches the current input snapshot and format —
 the anti-join-vs-completed-work semantics, implemented at stage
 granularity (atomic overwrite per stage ⇒ idempotent retries; SURVEY.md
 §7 risk 5: never non-idempotent appends).
@@ -20,24 +23,31 @@ import os
 import time
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from kg.probes import parquet_file_rows
 
 # Version of what the stages write.  Bump it whenever a stage's output
-# changes for the same inputs: manifests written under another format are
-# not resumed past, so a rerun never returns output the current code
-# cannot produce.  (Manifests from before this field existed carry none.)
-PIPELINE_FORMAT = 2
+# or its manifest changes for the same inputs: manifests written under
+# another format are not resumed past, so a rerun never returns output
+# the current code cannot produce or read.  (Manifests from before this
+# field existed carry none; format 3 added the schema read_stage needs.)
+PIPELINE_FORMAT = 3
 
-def partition_lineage(df: DataFrame) -> list[dict]:
-    """Per-partition row counts of a materialized DataFrame (the
-    north_rule's "per-partition lineage + metrics")."""
-    rows = (
-        df.select(F.spark_partition_id().alias("pid"))
-        .groupBy("pid")
-        .count()
-        .collect()
-    )
-    return [{"partition": int(r["pid"]), "rows": int(r["count"])} for r in rows]
+
+def _as_read(t: T.DataType) -> T.DataType:
+    """The type a parquet read reports for a written type: Spark reads
+    every column, array element and map value of a file source as
+    nullable."""
+    if isinstance(t, T.StructType):
+        return T.StructType(
+            [T.StructField(f.name, _as_read(f.dataType), True, f.metadata) for f in t]
+        )
+    if isinstance(t, T.ArrayType):
+        return T.ArrayType(_as_read(t.elementType), True)
+    if isinstance(t, T.MapType):
+        return T.MapType(_as_read(t.keyType), _as_read(t.valueType), True)
+    return t
 
 
 def _manifest_path(out_dir: str, stage: str) -> str:
@@ -88,15 +98,14 @@ def write_stage(
         df = df.repartition(*cluster_by)
     df.write.mode("overwrite").parquet(path)
     elapsed = time.monotonic() - t0
-    spark = df.sparkSession
-    written = spark.read.parquet(path)
-    lineage = partition_lineage(written)
+    lineage = [{"file": f, "rows": n} for f, n in parquet_file_rows(path).items()]
     manifest = {
         "stage": stage,
         "path": path,
         "input_snapshot": input_snapshot,
         "format": PIPELINE_FORMAT,
-        "rows": int(sum(p["rows"] for p in lineage)),
+        "schema": _as_read(df.schema).jsonValue(),
+        "rows": sum(p["rows"] for p in lineage),
         "partitions": len(lineage),
         "partition_lineage": lineage,
         "wall_sec": round(elapsed, 3),
@@ -107,11 +116,14 @@ def write_stage(
 
 
 def read_stage(spark: SparkSession, out_dir: str, stage: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(out_dir, stage))
+    """A written stage, read with the schema its manifest records (no
+    schema-inference job)."""
+    with open(_manifest_path(out_dir, stage)) as f:
+        schema = T.StructType.fromJson(json.load(f)["schema"])
+    return spark.read.schema(schema).parquet(os.path.join(out_dir, stage))
 
 
 __all__ = [
-    "partition_lineage",
     "write_stage",
     "read_stage",
     "stage_is_complete",

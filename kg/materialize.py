@@ -23,8 +23,9 @@ Reference analogs:
 from __future__ import annotations
 
 import datetime as dt
+import functools
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -380,14 +381,10 @@ def provenance_edges(spark: SparkSession) -> DataFrame:
     return spark.createDataFrame(rows, EDGES_SCHEMA)
 
 
-def discarded_catalog_entities(catalog: DataFrame, mapping: DataFrame) -> DataFrame:
-    """D5 (ReactomeBatchImporter.java:81,615,624 `discarded` set): the
-    LOSERS of the representative-per-component top-1 reduction — catalog
-    rows whose attributes were dropped because another entity of the same
-    alias component won (min entity_id).  Returns (entity_id,
-    canonical_id); count it into the run manifest like the reference's
-    import summary."""
-    pairs = (
+def _catalog_components(catalog: DataFrame, mapping: DataFrame) -> DataFrame:
+    """(canonical_id, entity_id) per catalog row: the alias component
+    each catalog entity falls in (itself when unmapped)."""
+    return (
         catalog.join(
             mapping.withColumnRenamed("node", "entity_id"), "entity_id", "left"
         )
@@ -396,6 +393,16 @@ def discarded_catalog_entities(catalog: DataFrame, mapping: DataFrame) -> DataFr
             "entity_id",
         )
     )
+
+
+def discarded_catalog_entities(catalog: DataFrame, mapping: DataFrame) -> DataFrame:
+    """D5 (ReactomeBatchImporter.java:81,615,624 `discarded` set): the
+    LOSERS of the representative-per-component top-1 reduction — catalog
+    rows whose attributes were dropped because another entity of the same
+    alias component won (min entity_id).  Returns (entity_id,
+    canonical_id); count_discarded_catalog_entities counts it in one
+    aggregate for the run summary."""
+    pairs = _catalog_components(catalog, mapping)
     # r6 (VERDICT r5 #2 fix class): losers = rows above the per-component
     # min — groupBy min + join-back instead of a row_number window, so a
     # giant component's rows partial-aggregate map-side and the join-back
@@ -408,29 +415,31 @@ def discarded_catalog_entities(catalog: DataFrame, mapping: DataFrame) -> DataFr
     )
 
 
+def count_discarded_catalog_entities(catalog: DataFrame, mapping: DataFrame) -> int:
+    """discarded_catalog_entities(...).count() in one aggregate: every
+    component keeps exactly one row, so the losers are the rows minus the
+    distinct representatives (exact because entity_id is the catalog
+    key)."""
+    row = _catalog_components(catalog, mapping).agg(
+        (F.count("canonical_id") - F.countDistinct("canonical_id")).alias("n")
+    ).collect()[0]
+    return int(row["n"])
+
+
 # ---------------------------------------------------------------------------
 # QA (V1/V2 analogs) — write-then-validate, like the reference's deferred
 # constraints.
 # ---------------------------------------------------------------------------
-def qa_uniqueness(df: DataFrame, keys: list[str]) -> DataFrame:
-    """V2: post-write uniqueness assertion data — rows violating the key."""
-    return df.groupBy(*keys).count().where(F.col("count") > 1)
-
-
-def qa_consistency(
+def qa_consistency_checks(
     df: DataFrame,
     table: str,
     exemptions: dict[str, list] | None = None,
     id_col: str | None = None,
-) -> DataFrame:
-    """V1: nullability-category violations per column, as a report
-    DataFrame with the same CSV header as ReactomeBatchImporter.java:1173:
-    (SchemaClass, Attribute, Category, Error, violations).
-
-    V4 (ReactomeBatchImporter.java:1131-1132: TAXONOMY_ROOT is exempted
-    from the missing-superTaxon check): ``exemptions`` maps an attribute
-    name to the list of ``id_col`` values allowed to violate it — those
-    rows are excluded from that attribute's count only."""
+) -> list[Column]:
+    """V1's aggregate expressions over ``df``: one struct per checked
+    column, (SchemaClass, Attribute, Category, Error, violations), its
+    violations a SUM over the rows.  qa_consistency stacks them into a
+    report; run_qa folds them into its one aggregate per table."""
     cats = ATTRIBUTE_CATEGORIES.get(table, {})
     exemptions = exemptions or {}
     if exemptions and id_col is None:
@@ -459,6 +468,24 @@ def qa_consistency(
                 F.sum(violation.cast("long")).alias("violations"),
             ).alias(f"chk_{col}")
         )
+    return checks
+
+
+def qa_consistency(
+    df: DataFrame,
+    table: str,
+    exemptions: dict[str, list] | None = None,
+    id_col: str | None = None,
+) -> DataFrame:
+    """V1: nullability-category violations per column, as a report
+    DataFrame with the same CSV header as ReactomeBatchImporter.java:1173:
+    (SchemaClass, Attribute, Category, Error, violations).
+
+    V4 (ReactomeBatchImporter.java:1131-1132: TAXONOMY_ROOT is exempted
+    from the missing-superTaxon check): ``exemptions`` maps an attribute
+    name to the list of ``id_col`` values allowed to violate it — those
+    rows are excluded from that attribute's count only."""
+    checks = qa_consistency_checks(df, table, exemptions, id_col)
     if not checks:
         spark = df.sparkSession
         return spark.createDataFrame(
@@ -472,16 +499,35 @@ def qa_consistency(
     return stacked.select("r.*").where(F.col("violations") > 0)
 
 
-def input_snapshot_checksum(spark: SparkSession, df: DataFrame) -> str:
-    """V3/S11 analog: content checksum of an input table (sum of row
-    hashes — the reference sums MySQL CHECKSUM TABLE per table,
-    ReactomeBatchImporter.java:1091-1122)."""
-    row = df.agg(
-        F.coalesce(
-            F.sum(F.xxhash64(*df.columns).cast("decimal(38,0)")), F.lit(0)
-        ).cast("string").alias("h")
+def input_snapshot_checksums(dfs: list[DataFrame]) -> list[str]:
+    """V3/S11 analog: content checksum per input table (sum of row hashes
+    — the reference sums MySQL CHECKSUM TABLE per table,
+    ReactomeBatchImporter.java:1091-1122), for all tables in one action:
+    each table's row hashes are tagged with its position, unioned, and
+    summed per tag."""
+    hashes = [
+        df.select(
+            F.lit(i).alias("i"),
+            F.xxhash64(*df.columns).cast("decimal(38,0)").alias("h"),
+        )
+        for i, df in enumerate(dfs)
+    ]
+    row = functools.reduce(DataFrame.unionByName, hashes).agg(
+        *[
+            F.coalesce(F.sum(F.when(F.col("i") == i, F.col("h"))), F.lit(0))
+            .cast("string")
+            .alias(f"h{i}")
+            for i in range(len(dfs))
+        ]
     ).collect()[0]
-    return f"xxh64:{int(row['h']) & 0xFFFFFFFFFFFFFFFF:016x}"
+    return [
+        f"xxh64:{int(row[f'h{i}']) & 0xFFFFFFFFFFFFFFFF:016x}" for i in range(len(dfs))
+    ]
+
+
+def input_snapshot_checksum(spark: SparkSession, df: DataFrame) -> str:
+    """Content checksum of one input table (input_snapshot_checksums)."""
+    return input_snapshot_checksums([df])[0]
 
 
 __all__ = [
@@ -494,10 +540,12 @@ __all__ = [
     "provenance_nodes",
     "provenance_edges",
     "discarded_catalog_entities",
+    "count_discarded_catalog_entities",
     "top_level_component_ids",
-    "qa_uniqueness",
     "qa_consistency",
+    "qa_consistency_checks",
     "input_snapshot_checksum",
+    "input_snapshot_checksums",
     "SYMMETRIC_PREDICATES",
     "REVERSED_PREDICATES",
     "RUN_TS",

@@ -14,11 +14,28 @@ bench scale (~0.3s per probe).  Two cases need no job at all:
 
 Anything else — or any error — falls back to the bounded limit+count
 job, so the probe is never wrong, only sometimes cheaper.
+
+parquet_file_rows reads the same footers for a directory a writer just
+filled, so row counts of written output never need a read-back job.
 """
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame
+
+
+def parquet_file_rows(directory: str) -> dict[str, int]:
+    """Row count per parquet part file directly under ``directory``,
+    read from the footers on the driver (no Spark job)."""
+    import pyarrow.parquet as pq
+
+    return {
+        f: pq.read_metadata(os.path.join(directory, f)).num_rows
+        for f in sorted(os.listdir(directory))
+        if f.endswith(".parquet")
+    }
 
 
 def rows_at_most(df: DataFrame, thr: int) -> bool:
@@ -45,4 +62,4 @@ def rows_at_most(df: DataFrame, thr: int) -> bool:
     return df.limit(thr + 1).count() <= thr
 
 
-__all__ = ["rows_at_most"]
+__all__ = ["rows_at_most", "parquet_file_rows"]

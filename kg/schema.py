@@ -111,6 +111,28 @@ EDGES_SCHEMA = T.StructType(
     ]
 )
 
+# Incremental edge state (kg.materialize.edge_partials / merge_edge_state):
+# the edge key, its stoichiometry so far and its first occurrence.
+EDGE_STATE_SCHEMA = T.StructType(
+    [
+        T.StructField("src", T.StringType(), True),
+        T.StructField("rel_type", T.StringType(), True),
+        T.StructField("dst", T.StringType(), True),
+        T.StructField("stoichiometry", T.IntegerType(), True),
+        T.StructField(
+            "first_occ",
+            T.StructType(
+                [
+                    T.StructField("conv_id", T.StringType(), True),
+                    T.StructField("turn_idx", T.IntegerType(), True),
+                    T.StructField("span_start", T.IntegerType(), True),
+                ]
+            ),
+            True,
+        ),
+    ]
+)
+
 # ---------------------------------------------------------------------------
 # Nullability categories (ReactomeAttribute.java:12-28)
 # ---------------------------------------------------------------------------

@@ -8,7 +8,9 @@ Streaming:
 - transcript_stream: file-source stream over a growing parquet directory
   (stand-in for Kafka/Iceberg-CDC at deployment).
 - run_incremental: foreachBatch pipeline — each micro-batch runs the
-  batch stages (extract → link → canonicalize), appends canonical
+  batch stages (extract → link → canonicalize) with ONE extraction (the
+  raw triples are persisted for the micro-batch: linking's vocabulary
+  count and the epoch write both read them), appends canonical
   triples partitioned by epoch, and COMPACTS the edge table
   incrementally (VERDICT r4 item 3): the batch's edge partials
   (kg.materialize.edge_partials — stoichiometry sums, first_occ mins)
@@ -17,19 +19,24 @@ Streaming:
   the final `order` window (finalize_edge_state) runs over edges only.
   foreachBatch + epoch-keyed overwrite gives exactly-once per
   micro-batch on retry (an epoch retry re-merges from the PREVIOUS
-  epoch's snapshot, not from a half-updated state).
+  epoch's snapshot, not from a half-updated state).  The per-epoch
+  statistics come from parquet footers and an Observation on the merge
+  write, and every read of the epoch's own output names its schema, so
+  no Spark job runs only to count or to infer a schema.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from kg.canonicalize import apply_canonical_map, connected_components
 from kg.extract import extract_triples
 from kg.link import link_triples
+from kg.probes import parquet_file_rows
 from kg.schema import TRANSCRIPTS_SCHEMA
 
 
@@ -73,9 +80,11 @@ def run_incremental(
     checkpoint (offsets) — unprocessed files only — and edge compaction
     resumes from the last epoch's state snapshot.
     """
+    import pyarrow.parquet as pq
+
     from kg.canonicalize import update_connected_components
     from kg.materialize import edge_partials, finalize_edge_state, merge_edge_state
-    from kg.schema import ALIAS_PAIRS_SCHEMA
+    from kg.schema import ALIAS_PAIRS_SCHEMA, EDGE_STATE_SCHEMA
 
     triples_dir = os.path.join(out_dir, "canonical_triples_stream")
     edge_state_dir = os.path.join(out_dir, "edge_state_stream")
@@ -97,7 +106,7 @@ def run_incremental(
             if d.startswith("epoch=")
         )
 
-    def _compact_edges(epoch_id: int) -> None:
+    def _compact_edges(epoch_id: int, triples_schema: T.StructType) -> None:
         """Merge THIS epoch's edge partials into the persistent state.
 
         Reads only (a) the triples just written for this epoch and (b)
@@ -105,29 +114,27 @@ def run_incremental(
         history.  Retry-safe: a re-delivered epoch re-merges from the
         snapshot strictly BELOW it and overwrites its own snapshot."""
         delta = edge_partials(
-            spark.read.parquet(os.path.join(triples_dir, f"epoch={epoch_id}"))
+            spark.read.schema(triples_schema).parquet(
+                os.path.join(triples_dir, f"epoch={epoch_id}")
+            )
         )
+        observed = Observation()
+        delta = delta.observe(observed, F.count(F.lit(1)).alias("rows"))
         prior = [e for e in _epoch_snapshots() if e < epoch_id]
         prev = (
-            spark.read.parquet(
+            spark.read.schema(EDGE_STATE_SCHEMA).parquet(
                 os.path.join(edge_state_dir, f"epoch={prior[-1]}")
             )
             if prior
             else None
         )
-        merged = merge_edge_state(prev, delta)
-        merged.write.mode("overwrite").parquet(
-            os.path.join(edge_state_dir, f"epoch={epoch_id}")
-        )
+        snapshot = os.path.join(edge_state_dir, f"epoch={epoch_id}")
+        merge_edge_state(prev, delta).write.mode("overwrite").parquet(snapshot)
         edge_stats.append(
             {
                 "epoch": int(epoch_id),
-                "n_delta_partials": int(delta.count()),
-                "n_state_edges": int(
-                    spark.read.parquet(
-                        os.path.join(edge_state_dir, f"epoch={epoch_id}")
-                    ).count()
-                ),
+                "n_delta_partials": int(observed.get["rows"]),
+                "n_state_edges": sum(parquet_file_rows(snapshot).values()),
             }
         )
 
@@ -140,8 +147,8 @@ def run_incremental(
         new = [f for f in files if f not in seen_files]
         n_delta = 0
         if new:
+            n_delta = sum(pq.read_metadata(f).num_rows for f in new)
             delta = spark.read.schema(ALIAS_PAIRS_SCHEMA).parquet(*new)
-            n_delta = delta.count()
             # localCheckpoint: truncate the per-batch composition lineage
             # AND pin the state against later mutation of the input files
             state["mapping"] = update_connected_components(
@@ -160,16 +167,21 @@ def run_incremental(
 
     def _process(batch_df: DataFrame, epoch_id: int) -> None:
         mapping = _alias_mapping(epoch_id) if alias_dir else static_mapping
-        raw = extract_triples(batch_df)
-        linked = link_triples(raw, catalog)
-        canonical = apply_canonical_map(linked, mapping)
-        # epoch-keyed dynamic-partition overwrite ⇒ idempotent on retry
-        (canonical.withColumn("epoch", F.lit(epoch_id))
-         .write.mode("overwrite")
-         .partitionBy("epoch")
-         .option("partitionOverwriteMode", "dynamic")
-         .parquet(triples_dir))
-        _compact_edges(int(epoch_id))
+        # persisted for the micro-batch: link_triples' vocabulary count
+        # and the epoch write below would each run the extraction
+        raw = extract_triples(batch_df).persist()
+        try:
+            linked = link_triples(raw, catalog)
+            canonical = apply_canonical_map(linked, mapping)
+            # epoch-keyed dynamic-partition overwrite ⇒ idempotent on retry
+            (canonical.withColumn("epoch", F.lit(epoch_id))
+             .write.mode("overwrite")
+             .partitionBy("epoch")
+             .option("partitionOverwriteMode", "dynamic")
+             .parquet(triples_dir))
+        finally:
+            raw.unpersist()
+        _compact_edges(int(epoch_id), canonical.schema)
         epochs.append(int(epoch_id))
 
     q = (
@@ -195,7 +207,7 @@ def run_incremental(
         }
     # final edges come from the LAST state snapshot — the order window +
     # projection run over edges only; no scan of the triple history
-    final_state = spark.read.parquet(
+    final_state = spark.read.schema(EDGE_STATE_SCHEMA).parquet(
         os.path.join(edge_state_dir, f"epoch={snapshots[-1]}")
     )
     # provenance wiring for parity with the batch pipeline's edge table

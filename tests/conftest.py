@@ -44,3 +44,20 @@ def alias_pairs_df(spark, alias_pairs_pdf):
 @pytest.fixture(scope="session")
 def transcripts_df(spark, transcripts_pdf):
     return spark.createDataFrame(transcripts_pdf, schema=TRANSCRIPTS_SCHEMA)
+
+
+@pytest.fixture(scope="session")
+def last_job_id(spark):
+    """Callable: id of the newest job in Spark's status store once the
+    listener bus has drained (-1 before any job).  Job ids are
+    sequential, so the difference of two calls counts the jobs started in
+    between, on any thread — and stays exact after the store evicts old
+    jobs."""
+    sc = spark.sparkContext._jsc.sc()
+
+    def _last() -> int:
+        sc.listenerBus().waitUntilEmpty()
+        jobs = sc.statusStore().jobsList(None)
+        return max(jobs.head().jobId(), jobs.last().jobId()) if jobs.size() else -1
+
+    return _last

@@ -3,9 +3,10 @@ symmetric-edge canonicalization; QA constraints)."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
-from kg.materialize import build_edges, qa_consistency, qa_uniqueness
+from kg.materialize import build_edges, qa_consistency
 
 TRIPLE_SCHEMA = (
     "conv_id string, turn_idx int, span_start int, "
@@ -83,12 +84,6 @@ def test_direction_flip_produced_by(spark):
 def test_self_loops_dropped(spark):
     rows = [("c1", 0, 0, "A", "co_occurs_with", "A")]
     assert _edges(spark, rows).count() == 0
-
-
-def test_qa_uniqueness_detects_dups(spark):
-    df = spark.createDataFrame([(1,), (1,), (2,)], "k int")
-    v = qa_uniqueness(df, ["k"]).collect()
-    assert len(v) == 1 and v[0]["k"] == 1 and v[0]["count"] == 2
 
 
 def test_qa_consistency_flags_mandatory_nulls(spark):
@@ -236,3 +231,91 @@ def test_node_rep_and_discarded_have_no_window(spark):
         assert "Window" not in plan, plan
     # semantics unchanged: E1 wins the merged component, E2 is discarded
     assert [tuple(r) for r in disc.collect()] == [("E2", "E1")]
+
+
+_QA_NODES = [  # node_id, canonical_id, labels, display_name, schema_class
+    (1, "E1", ["Entity"], "One", "concept"),
+    (2, "E2", ["Entity"], "Two", "concept"),
+]
+_QA_EDGES = [  # src, dst, rel_type, stoichiometry, order
+    ("E1", "E2", "uses", 1, 1),
+    ("E2", "E1", "uses", 1, 1),
+]
+
+
+@pytest.mark.parametrize(
+    "extra_nodes, extra_edges, violated",
+    [
+        pytest.param([(1, "E3", ["Entity"], "Three", "concept")], [],
+                     {"dup_node_ids"}, id="duplicate-node-id"),
+        pytest.param([(3, "E1", ["Entity"], "One again", "concept")], [],
+                     {"dup_canonical_ids"}, id="duplicate-canonical-id"),
+        # a NULL key value is itself a MANDATORY violation, so the table's
+        # consistency key is non-zero too
+        pytest.param([(None, "E3", ["Entity"], "Three", "concept"),
+                      (None, "E4", ["Entity"], "Four", "concept")], [],
+                     {"dup_node_ids", "node_consistency"}, id="null-key-duplicate"),
+        pytest.param([], [("E1", "E2", "uses", 3, 2)],
+                     {"dup_edges"}, id="duplicate-edge"),
+        # one NULL key is not a duplicate: only the nullability check fires
+        pytest.param([(None, "E3", ["Entity"], "Three", "concept")], [],
+                     {"node_consistency"}, id="null-mandatory-node-column"),
+        pytest.param([], [("E1", "E2", "", 1, 1)],
+                     {"edge_consistency"}, id="empty-required-edge-string"),
+    ],
+)
+def test_run_qa_flags_exactly_its_violation(spark, extra_nodes, extra_edges, violated):
+    """Each QA key turns non-zero on its own violation and on no other
+    key's; the clean tables score all zeros."""
+    from kg.pipeline import run_qa
+
+    nodes = spark.createDataFrame(
+        _QA_NODES + extra_nodes,
+        "node_id long, canonical_id string, labels array<string>, "
+        "display_name string, schema_class string",
+    )
+    edges = spark.createDataFrame(
+        _QA_EDGES + extra_edges,
+        "src string, dst string, rel_type string, stoichiometry int, order int",
+    )
+    qa = run_qa(nodes, edges)
+    assert set(qa) == {"dup_node_ids", "dup_canonical_ids", "dup_edges",
+                       "node_consistency", "edge_consistency"}
+    assert {k for k, v in qa.items() if v != 0} == violated, qa
+
+
+def test_count_discarded_equals_discarded_rows(spark, catalog_df):
+    """The one-aggregate discarded count equals the size of the loser
+    set, with merged, unmerged and non-catalog nodes in the mapping."""
+    from kg.materialize import (count_discarded_catalog_entities,
+                                discarded_catalog_entities)
+
+    mapping = spark.createDataFrame(
+        [("cat:Q00001", "cat:Q00000"), ("cat:Q00002", "cat:Q00000"),
+         ("cat:Q00004", "cat:Q00003"), ("new:x", "cat:Q00003"),
+         ("new:y", "new:z")],
+        "node string, canonical_id string",
+    )
+    want = discarded_catalog_entities(catalog_df, mapping).count()
+    assert want == 3
+    assert count_discarded_catalog_entities(catalog_df, mapping) == want
+
+
+def test_snapshot_checksums_match_per_table_sums(
+    spark, transcripts_df, catalog_df, alias_pairs_df
+):
+    """The one-action checksums are byte-identical to each table's own
+    sum of row hashes, an empty table included (resume compares them as
+    strings)."""
+    from kg.materialize import input_snapshot_checksum, input_snapshot_checksums
+
+    def reference(df):
+        h = df.agg(F.coalesce(F.sum(F.xxhash64(*df.columns).cast("decimal(38,0)")),
+                              F.lit(0)).cast("string")).collect()[0][0]
+        return f"xxh64:{int(h) & 0xFFFFFFFFFFFFFFFF:016x}"
+
+    tables = [transcripts_df, catalog_df, alias_pairs_df.limit(0)]
+    want = [reference(df) for df in tables]
+    assert input_snapshot_checksums(tables) == want
+    assert input_snapshot_checksum(spark, catalog_df) == want[1]
+    assert want[2] == "xxh64:0000000000000000"

@@ -9,7 +9,8 @@ import shutil
 
 import pandas as pd
 
-from kg.pipeline import run_pipeline_materialized
+from kg.lineage import read_stage
+from kg.pipeline import STAGES, run_pipeline_materialized
 
 
 def _edges_pdf(res) -> pd.DataFrame:
@@ -93,3 +94,36 @@ def test_manifest_without_current_format_is_rebuilt(
     assert not any(m.get("resumed") for m in rerun["manifests"].values())
     assert set(rerun["manifests"]) == set(full["manifests"])
     pd.testing.assert_frame_equal(_edges_pdf(rerun), baseline)
+
+
+def test_manifests_match_written_stages(
+    spark, transcripts_df, catalog_df, alias_pairs_df, last_job_id, tmp_path
+):
+    """Every stage's manifest describes what was written without reading
+    it back: its row count and schema equal a fresh read's, and a resumed
+    stage reads back without starting a Spark job."""
+    from kg.materialize import discarded_catalog_entities
+
+    out = str(tmp_path / "kgout_exact")
+    res = run_pipeline_materialized(
+        spark, transcripts_df, catalog_df, alias_pairs_df, out
+    )
+    assert set(res["manifests"]) == set(STAGES)
+    for stage in STAGES:
+        m = res["manifests"][stage]
+        written = spark.read.parquet(m["path"])
+        assert m["rows"] == written.count(), stage
+        assert m["rows"] == sum(p["rows"] for p in m["partition_lineage"]), stage
+        assert read_stage(spark, out, stage).schema == written.schema, stage
+    assert res["discarded_catalog_entities"] == discarded_catalog_entities(
+        catalog_df, read_stage(spark, out, "mapping")
+    ).count()
+
+    resumed = run_pipeline_materialized(
+        spark, transcripts_df, catalog_df, alias_pairs_df, out
+    )
+    assert all(m.get("resumed") for m in resumed["manifests"].values())
+    before = last_job_id()
+    for stage in STAGES:
+        read_stage(spark, out, stage)
+    assert last_job_id() == before

@@ -290,3 +290,43 @@ def test_incremental_composes_alias_delta_with_new_transcripts(spark, tmp_path):
     merged = {(r["src"], r["dst"]) for r in second["edges"].collect()
               if r["rel_type"] == "co_occurs_with"}
     assert ("new:c1", "new:d") in merged
+
+
+def test_incremental_stats_are_exact(
+    spark, transcripts_pdf, catalog_df, alias_pairs_pdf, tmp_path
+):
+    """After two refreshes, each epoch's statistics equal counts taken by
+    reading back what that epoch wrote and read."""
+    from kg.materialize import edge_partials
+
+    feed = tmp_path / "sfeed"
+    adir = tmp_path / "saliases"
+    feed.mkdir()
+    adir.mkdir()
+    out = str(tmp_path / "sout")
+    convs = sorted(transcripts_pdf["conv_id"].unique())
+    alias_files = []
+    stats = []
+    for k, lo in enumerate((0, 30)):
+        transcripts_pdf[transcripts_pdf["conv_id"].isin(convs[lo:lo + 30])].to_parquet(
+            str(feed / f"r{k}.parquet"), index=False,
+            coerce_timestamps="us", allow_truncated_timestamps=True)
+        path = str(adir / f"a{k}.parquet")
+        alias_pairs_pdf.iloc[k * 100:(k + 1) * 100].to_parquet(path, index=False)
+        alias_files.append(path)
+        res = run_incremental(spark, str(feed), catalog_df, str(adir), out)
+        assert res["epochs"] == 1
+        stats.append((res["edge_stats"][0], res["cc_stats"][0], list(alias_files)))
+
+    for est, cst, files in stats:
+        epoch = est["epoch"]
+        assert cst["epoch"] == epoch
+        state = spark.read.parquet(os.path.join(out, "edge_state_stream", f"epoch={epoch}"))
+        assert est["n_state_edges"] == state.count()
+        triples = spark.read.parquet(
+            os.path.join(out, "canonical_triples_stream", f"epoch={epoch}"))
+        assert est["n_delta_partials"] == edge_partials(triples).count()
+        # each call reads every alias file present at its start
+        assert cst["n_new_alias_files"] == len(files)
+        assert cst["n_delta_edges"] == spark.read.parquet(*files).count()
+    assert stats[0][0]["n_state_edges"] < stats[1][0]["n_state_edges"]
