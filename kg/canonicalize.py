@@ -25,6 +25,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from kg.schema import MAPPING_SCHEMA
+from kg.session import local_table
+
 
 def _driver_union_find(edges: DataFrame) -> DataFrame:
     """Small-graph fast path: one collect + path-halving union-find.
@@ -47,7 +50,7 @@ def _driver_union_find(edges: DataFrame) -> DataFrame:
                 ra, rb = rb, ra
             parent[rb] = ra
     rows = [(n, find(n)) for n in parent]
-    return spark.createDataFrame(rows, "node string, canonical_id string")
+    return local_table(spark, rows, MAPPING_SCHEMA)
 
 
 def _symmetrize(edges: DataFrame) -> DataFrame:

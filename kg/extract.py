@@ -29,7 +29,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from kg.schema import MENTIONS_SCHEMA, RAW_TRIPLES_SCHEMA
+from kg.schema import RAW_TRIPLES_SCHEMA
 
 MENTION_RE = re.compile(r"\[\[(.*?)\]\]")
 
@@ -339,34 +339,10 @@ def extract_triples_pandas(transcripts: DataFrame) -> DataFrame:
     )
 
 
-def extract_mentions(transcripts: DataFrame) -> DataFrame:
-    """Flat mention table (for stats/QA); pure built-ins, no Python:
-    regexp_extract_all stays inside whole-stage codegen."""
-    return (
-        transcripts.select(
-            "conv_id",
-            "turn_idx",
-            "role",
-            "tool",
-            F.regexp_extract_all("text", F.lit(MENTION_PAT_JAVA), 1).alias("surfaces"),
-        )
-        .select(
-            "conv_id",
-            "turn_idx",
-            F.posexplode("surfaces").alias("mention_pos", "surface"),
-            "role",
-            "tool",
-        )
-        .withColumn("mention_pos", F.col("mention_pos").cast("int"))
-        .where(F.col("surface").rlike(NONBLANK_RE))
-    )
-
-
 __all__ = [
     "extract_triples",
     "extract_triples_sql",
     "extract_triples_pandas",
-    "extract_mentions",
     "extract_conversation",
     "MENTION_RE",
     "PRED_CO_OCCURS",

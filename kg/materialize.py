@@ -27,10 +27,18 @@ import functools
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
 from kg.link import MINTED_PREFIX, TOOL_ENTITY_PREFIX
-from kg.schema import ATTRIBUTE_CATEGORIES, ENTITY_TYPE_LABELS, MANDATORY, REQUIRED
+from kg.schema import (
+    ATTRIBUTE_CATEGORIES,
+    ENTITY_TYPE_LABELS,
+    LABELS_SCHEMA,
+    MANDATORY,
+    REQUIRED,
+)
+from kg.session import local_table
 
 # D2: predicates whose edges are undirected — store once, canonical direction.
 SYMMETRIC_PREDICATES = ["co_occurs_with"]
@@ -231,10 +239,7 @@ def build_nodes(
     )
     spark = canonical_triples.sparkSession
     labels_df = F.broadcast(
-        spark.createDataFrame(
-            [(k, v) for k, v in ENTITY_TYPE_LABELS.items()],
-            "entity_type string, labels array<string>",
-        )
+        local_table(spark, list(ENTITY_TYPE_LABELS.items()), LABELS_SCHEMA)
     )
     n = ids.join(_maybe_bcast(cat, _cat_small), "canonical_id", "left")
     n = n.withColumn(
@@ -374,11 +379,18 @@ def provenance_edges(spark: SparkSession) -> DataFrame:
     static properties map (TrackingObjects.java:29-33)."""
     from kg.schema import EDGES_SCHEMA
 
+    # created_ts is added as a literal, as finalize_edge_state does
+    # (local_table: Arrow would read RUN_TS in the session time zone)
+    schema = T.StructType([f for f in EDGES_SCHEMA if f.name != "created_ts"])
     rows = [
-        (PERSON_ID, INSTANCE_EDIT_ID, "author", 1, 1, None, RUN_TS, PROVENANCE_STAGE),
-        (INSTANCE_EDIT_ID, DB_INFO_ID, "created", 1, 1, None, RUN_TS, PROVENANCE_STAGE),
+        (PERSON_ID, INSTANCE_EDIT_ID, "author", 1, 1, None, PROVENANCE_STAGE),
+        (INSTANCE_EDIT_ID, DB_INFO_ID, "created", 1, 1, None, PROVENANCE_STAGE),
     ]
-    return spark.createDataFrame(rows, EDGES_SCHEMA)
+    return (
+        local_table(spark, rows, schema)
+        .withColumn("created_ts", F.lit(RUN_TS))
+        .select(*EDGES_SCHEMA.names)
+    )
 
 
 def _catalog_components(catalog: DataFrame, mapping: DataFrame) -> DataFrame:

@@ -10,13 +10,19 @@ Two run modes:
 - run_pipeline_materialized(...): every stage lands in parquet with a
   manifest; completed stages (same input snapshot and pipeline format,
   kg.lineage.PIPELINE_FORMAT) are skipped on rerun — the
-  checkpointed-resumability contract of the north_rule.
+  checkpointed-resumability contract of the north_rule.  Stages that do
+  not read each other run side by side: CC beside extract → link, nodes
+  beside edges, node QA and the discarded count beside edge QA; worker
+  threads inherit the caller's job group, description and tags.
 """
 
 from __future__ import annotations
 
+from concurrent.futures import Future, ThreadPoolExecutor
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.util import inheritable_thread_target
 
 from kg.canonicalize import apply_canonical_map, connected_components
 from kg.extract import extract_triples
@@ -120,22 +126,27 @@ def _qa_table(
     return out
 
 
+def _node_qa(nodes: DataFrame) -> dict[str, int]:
+    return _qa_table(
+        nodes,
+        "nodes",
+        {"dup_node_ids": ["node_id"], "dup_canonical_ids": ["canonical_id"]},
+        "node_consistency",
+    )
+
+
+def _edge_qa(edges: DataFrame) -> dict[str, int]:
+    return _qa_table(
+        edges, "edges", {"dup_edges": ["src", "rel_type", "dst"]}, "edge_consistency"
+    )
+
+
 def run_qa(nodes: DataFrame, edges: DataFrame) -> dict[str, int]:
     """V1/V2 analogs, one aggregate per table.  dup_* are surplus-row
     counts (rows beyond one per key value) and *_consistency the number
     of columns with nullability violations; the contract is only zero
     (valid) vs non-zero (violated)."""
-    return {
-        **_qa_table(
-            nodes,
-            "nodes",
-            {"dup_node_ids": ["node_id"], "dup_canonical_ids": ["canonical_id"]},
-            "node_consistency",
-        ),
-        **_qa_table(
-            edges, "edges", {"dup_edges": ["src", "rel_type", "dst"]}, "edge_consistency"
-        ),
-    }
+    return {**_node_qa(nodes), **_edge_qa(edges)}
 
 
 def run_pipeline_materialized(
@@ -152,6 +163,16 @@ def run_pipeline_materialized(
     (ReactomeBatchImporter.java:145-149 ordered worklist); each stage is
     an atomic overwrite, so a crash between stages resumes exactly at the
     first incomplete stage (tested in tests/test_resume.py).
+
+    Stages that do not read each other run side by side, one branch on
+    the caller's thread and one on a worker thread, so their Spark jobs
+    share the cores instead of queueing behind each other's fixed costs:
+    CC (mapping) overlaps extract → link; nodes overlap edges; node QA
+    and the discarded count overlap edge QA.  Worker threads inherit the
+    caller's local properties (job group, description) and session tags
+    when the branch is submitted.  If any branch raises, the call raises
+    once every running branch has finished; a failed stage writes no
+    manifest, so a rerun rebuilds it and resumes the rest.
     """
     # snapshot covers ALL inputs: a change in any of them invalidates resume
     snap = "xxh64:" + "-".join(
@@ -173,38 +194,54 @@ def run_pipeline_materialized(
         )
         return read_stage(spark, out_dir, name)
 
-    raw = _stage("raw_triples", lambda: extract_triples(transcripts))
-    linked = _stage("linked_triples", lambda: link_triples(raw, catalog))
-    mapping = _stage("mapping", lambda: connected_components(alias_pairs))
-    canonical = _stage(
-        "canonical_triples", lambda: apply_canonical_map(linked, mapping)
-    )
-    nodes = _stage(
-        "nodes",
-        lambda: build_nodes(
-            canonical,
-            catalog,
-            mapping,
-            snap,
-            top_level_ids=top_level_component_ids(mapping),
-            db_info={
-                "name": "kg-pipeline",
-                "checksum": snap,
-                "engine": f"spark-{spark.version}",
-            },
-        ),
-    )
-    edges = _stage(
-        "edges",
-        lambda: build_edges(canonical).unionByName(provenance_edges(spark)),
-    )
-    qa = run_qa(nodes, edges)
-    # D5 analog (ReactomeBatchImporter.java:81,615,624): count the losers
-    # of the representative-per-component top-1 reduction in the summary
-    discarded = count_discarded_catalog_entities(catalog, mapping)
+    # the stage graph has at most three independent branches: the
+    # caller's thread plus two workers
+    with ThreadPoolExecutor(max_workers=2) as pool:
+
+        def _background(fn, *args) -> Future:
+            return pool.submit(inheritable_thread_target(spark)(fn), *args)
+
+        mapping_f = _background(
+            _stage, "mapping", lambda: connected_components(alias_pairs)
+        )
+        raw = _stage("raw_triples", lambda: extract_triples(transcripts))
+        linked = _stage("linked_triples", lambda: link_triples(raw, catalog))
+        mapping = mapping_f.result()
+        canonical = _stage(
+            "canonical_triples", lambda: apply_canonical_map(linked, mapping)
+        )
+        nodes_f = _background(
+            _stage,
+            "nodes",
+            lambda: build_nodes(
+                canonical,
+                catalog,
+                mapping,
+                snap,
+                top_level_ids=top_level_component_ids(mapping),
+                db_info={
+                    "name": "kg-pipeline",
+                    "checksum": snap,
+                    "engine": f"spark-{spark.version}",
+                },
+            ),
+        )
+        edges = _stage(
+            "edges",
+            lambda: build_edges(canonical).unionByName(provenance_edges(spark)),
+        )
+        nodes = nodes_f.result()
+        node_qa_f = _background(_node_qa, nodes)
+        # D5 analog (ReactomeBatchImporter.java:81,615,624): count the
+        # losers of the representative-per-component top-1 reduction in
+        # the summary
+        discarded_f = _background(count_discarded_catalog_entities, catalog, mapping)
+        edge_qa = _edge_qa(edges)
+        qa = {**node_qa_f.result(), **edge_qa}
+        discarded = discarded_f.result()
     return {
         "input_snapshot": snap,
-        "manifests": manifests,
+        "manifests": {name: manifests[name] for name in STAGES},
         "qa": qa,
         "discarded_catalog_entities": discarded,
         "nodes": nodes,

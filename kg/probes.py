@@ -9,8 +9,10 @@ bench scale (~0.3s per probe).  Two cases need no job at all:
 - a PLAIN parquet scan (optimized plan is a bare LogicalRelation, so no
   filter/projection can change the row count): sum the parquet FOOTER
   row counts driver-side, early-exiting once past the threshold;
-- a LOCAL relation (e.g. a mapping built by the driver union-find): the
-  row count is already in the plan.
+- a LOCAL relation (a table built on the driver with
+  ``kg.session.local_table``, e.g. the driver union-find mapping): the
+  row count is already in the plan.  ``createDataFrame(list)`` is not
+  one — it plans a scan of a Python RDD and takes the fallback.
 
 Anything else — or any error — falls back to the bounded limit+count
 job, so the probe is never wrong, only sometimes cheaper.

@@ -55,19 +55,6 @@ ALIAS_PAIRS_SCHEMA = T.StructType(
     ]
 )
 
-# Stage-1 output: raw mentions (pre-linking).  mention_pos is the ordinal of
-# the mention within its turn (0-based), not a char offset.
-MENTIONS_SCHEMA = T.StructType(
-    [
-        T.StructField("conv_id", T.StringType(), False),
-        T.StructField("turn_idx", T.IntegerType(), False),
-        T.StructField("mention_pos", T.IntegerType(), False),
-        T.StructField("surface", T.StringType(), False),
-        T.StructField("role", T.StringType(), False),
-        T.StructField("tool", T.StringType(), True),
-    ]
-)
-
 # Stage-1 output: raw triples over surface forms (pre-linking).  subj/obj are
 # surface strings here; Stage 2 rewrites them to entity ids; Stage 3 to
 # canonical ids.  span_start/turn_idx give the deterministic first-appearance
@@ -108,6 +95,14 @@ EDGES_SCHEMA = T.StructType(
         T.StructField("conv_id", T.StringType(), True),
         T.StructField("created_ts", T.TimestampType(), True),
         T.StructField("stage", T.StringType(), False),
+    ]
+)
+
+# Stage-3 output: the CC mapping, one row per alias-graph node.
+MAPPING_SCHEMA = T.StructType(
+    [
+        T.StructField("node", T.StringType(), True),
+        T.StructField("canonical_id", T.StringType(), True),
     ]
 )
 
@@ -176,3 +171,11 @@ ENTITY_TYPE_LABELS: dict[str, list[str]] = {
     "org": ["Organization", "Agent", "Entity"],
     "minted": ["MintedEntity", "Entity"],  # Stage-2 miss branch
 }
+
+# ENTITY_TYPE_LABELS as the table build_nodes joins.
+LABELS_SCHEMA = T.StructType(
+    [
+        T.StructField("entity_type", T.StringType(), True),
+        T.StructField("labels", T.ArrayType(T.StringType()), True),
+    ]
+)

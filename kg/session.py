@@ -12,7 +12,8 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 
 def _driver_memory_default(phys_bytes: int) -> str:
@@ -79,6 +80,23 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def local_table(spark: SparkSession, rows: list[tuple], schema: T.StructType) -> DataFrame:
+    """A driver-built table as a LocalRelation: the rows reach the JVM as
+    one Arrow stream, so no action on the table starts a Python worker
+    (``createDataFrame(list)`` plans a scan of a Python RDD instead), and
+    ``kg.probes.rows_at_most`` reads its size from the plan.  Arrow reads
+    naive datetimes in the session time zone, not the process's, so add
+    timestamp columns as literals on the result instead of passing them
+    here."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    table = pa.Table.from_pylist(
+        [dict(zip(schema.names, r)) for r in rows], schema=to_arrow_schema(schema)
+    )
+    return spark.createDataFrame(table, schema)
 
 
 def stop_spark() -> None:

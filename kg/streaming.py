@@ -37,7 +37,8 @@ from kg.canonicalize import apply_canonical_map, connected_components
 from kg.extract import extract_triples
 from kg.link import link_triples
 from kg.probes import parquet_file_rows
-from kg.schema import TRANSCRIPTS_SCHEMA
+from kg.schema import MAPPING_SCHEMA, TRANSCRIPTS_SCHEMA
+from kg.session import local_table
 
 
 def transcript_stream(spark: SparkSession, input_dir: str) -> DataFrame:
@@ -112,12 +113,17 @@ def run_incremental(
         Reads only (a) the triples just written for this epoch and (b)
         the previous epoch's edge-state snapshot — never the triple
         history.  Retry-safe: a re-delivered epoch re-merges from the
-        snapshot strictly BELOW it and overwrites its own snapshot."""
-        delta = edge_partials(
-            spark.read.schema(triples_schema).parquet(
-                os.path.join(triples_dir, f"epoch={epoch_id}")
-            )
+        snapshot strictly BELOW it and overwrites its own snapshot.  A
+        micro-batch whose turns yield no triples writes no epoch
+        directory; its delta is empty, and the snapshot is still written
+        so that the next epoch finds it."""
+        epoch_dir = os.path.join(triples_dir, f"epoch={epoch_id}")
+        triples = (
+            spark.read.schema(triples_schema).parquet(epoch_dir)
+            if os.path.isdir(epoch_dir)
+            else local_table(spark, [], triples_schema)
         )
+        delta = edge_partials(triples)
         observed = Observation()
         delta = delta.observe(observed, F.count(F.lit(1)).alias("rows"))
         prior = [e for e in _epoch_snapshots() if e < epoch_id]
@@ -160,9 +166,7 @@ def run_incremental(
              "n_delta_edges": int(n_delta)}
         )
         if state["mapping"] is None:
-            state["mapping"] = spark.createDataFrame(
-                [], "node string, canonical_id string"
-            )
+            state["mapping"] = local_table(spark, [], MAPPING_SCHEMA)
         return state["mapping"]
 
     def _process(batch_df: DataFrame, epoch_id: int) -> None:
@@ -201,7 +205,7 @@ def run_incremental(
 
         return {
             "epochs": 0,
-            "edges": spark.createDataFrame([], EDGES_SCHEMA),
+            "edges": local_table(spark, [], EDGES_SCHEMA),
             "cc_stats": cc_stats,
             "edge_stats": edge_stats,
         }

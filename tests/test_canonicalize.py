@@ -138,13 +138,15 @@ def test_update_connected_components_empty_and_noop_deltas(spark):
     assert sorted(map(tuple, m2.collect())) == [("n", "m")]
 
 
-def test_rows_at_most_probe_paths(spark, tmp_path):
+def test_rows_at_most_probe_paths(spark, tmp_path, last_job_id):
     """r6: the bounded row-count probe must answer identically through
     its three paths — parquet footers (plain scan), local relation, and
     the limit+count fallback (filtered plan)."""
     from pyspark.sql import functions as F
+    from pyspark.sql import types as T
 
     from kg.probes import rows_at_most
+    from kg.session import local_table
 
     p = str(tmp_path / "probe.parquet")
     spark.range(1000).withColumn("x", F.col("id") % 7).write.parquet(p)
@@ -156,10 +158,30 @@ def test_rows_at_most_probe_paths(spark, tmp_path):
     n = filtered.count()
     assert rows_at_most(filtered, n) is True
     assert rows_at_most(filtered, n - 1) is False
-    # local relation (driver-built)
-    local = spark.createDataFrame([(i,) for i in range(10)], "id long")
+    # local relation (driver-built): answered from the plan, no job
+    local = local_table(
+        spark, [(i,) for i in range(10)], T.StructType([T.StructField("id", T.LongType())])
+    )
+    before = last_job_id()
     assert rows_at_most(local, 10) is True
     assert rows_at_most(local, 9) is False
+    assert last_job_id() == before
+
+
+@pytest.mark.parametrize("pairs", [[("b", "a"), ("c", "b"), ("x", "y")], []])
+def test_driver_union_find_is_local_relation(spark, pairs):
+    """The driver union-find hands its mapping to the JVM as a
+    LocalRelation (no Python-worker scan), also when the alias graph is
+    empty."""
+    from kg.canonicalize import _driver_union_find
+
+    edges = spark.createDataFrame(pairs, "src string, dst string")
+    mapping = _driver_union_find(edges)
+    plan = mapping._jdf.queryExecution().optimizedPlan()
+    assert plan.getClass().getSimpleName() == "LocalRelation"
+    assert sorted(tuple(r) for r in mapping.collect()) == sorted(
+        (n, "a" if n in "abc" else "x") for n in {x for p in pairs for x in p}
+    )
 
 
 def test_src_min_equals_window_form_and_no_window_in_plan(spark):

@@ -7,7 +7,7 @@ import datetime as dt
 
 import pandas as pd
 
-from kg.extract import extract_conversation, extract_mentions, extract_triples
+from kg.extract import extract_conversation, extract_triples
 from kg.schema import TRANSCRIPTS_SCHEMA
 
 HAND_CONV = pd.DataFrame(
@@ -130,15 +130,6 @@ def test_sql_path_is_pure_jvm_one_exchange(spark):
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "Python" not in plan and "MapInPandas" not in plan
     assert plan.count("Exchange hashpartitioning") == 1
-
-
-def test_mentions_builtin_matches_udf(spark, transcripts_df, transcripts_pdf):
-    """extract_mentions (pure built-ins) agrees with the regex rules."""
-    got = extract_mentions(transcripts_df).count()
-    import re
-
-    exp = sum(len(re.findall(r"\[\[(.*?)\]\]", t)) for t in transcripts_pdf["text"])
-    assert got == exp
 
 
 def test_auto_impl_dispatches_on_size(spark, transcripts_df):

@@ -319,3 +319,34 @@ def test_snapshot_checksums_match_per_table_sums(
     assert input_snapshot_checksums(tables) == want
     assert input_snapshot_checksum(spark, catalog_df) == want[1]
     assert want[2] == "xxh64:0000000000000000"
+
+
+def test_provenance_edges_local_relation_same_rows(spark):
+    """provenance_edges is a LocalRelation with the rows the Python-row
+    construction gives, created_ts included, also when the session time
+    zone differs from the process's (Arrow would read a naive RUN_TS in
+    the session zone)."""
+    from kg.materialize import (
+        DB_INFO_ID,
+        INSTANCE_EDIT_ID,
+        PERSON_ID,
+        RUN_TS,
+        provenance_edges,
+    )
+    from kg.schema import EDGES_SCHEMA
+
+    rows = [
+        (PERSON_ID, INSTANCE_EDIT_ID, "author", 1, 1, None, RUN_TS, "provenance"),
+        (INSTANCE_EDIT_ID, DB_INFO_ID, "created", 1, 1, None, RUN_TS, "provenance"),
+    ]
+    tz = spark.conf.get("spark.sql.session.timeZone")
+    try:
+        for zone in (tz, "America/Los_Angeles"):
+            spark.conf.set("spark.sql.session.timeZone", zone)
+            got = provenance_edges(spark)
+            plan = got._jdf.queryExecution().optimizedPlan()
+            assert plan.getClass().getSimpleName() == "LocalRelation"
+            assert got.columns == EDGES_SCHEMA.names
+            assert got.collect() == spark.createDataFrame(rows, EDGES_SCHEMA).collect()
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", tz)

@@ -8,6 +8,7 @@ import os
 import shutil
 
 import pandas as pd
+import pytest
 
 from kg.lineage import read_stage
 from kg.pipeline import STAGES, run_pipeline_materialized
@@ -127,3 +128,64 @@ def test_manifests_match_written_stages(
     for stage in STAGES:
         read_stage(spark, out, stage)
     assert last_job_id() == before
+
+
+def test_failed_branch_raises_and_resumes(
+    spark, transcripts_df, catalog_df, alias_pairs_df, tmp_path, monkeypatch
+):
+    """CC runs beside extract → link.  When it raises, the build raises,
+    the mapping stage has no manifest, and a rerun resumes the stages the
+    other branch finished and ends with a fresh run's edges."""
+    import kg.pipeline
+
+    out = str(tmp_path / "kgout_fail")
+
+    def _boom(alias_pairs):
+        raise RuntimeError("cc failed")
+
+    with monkeypatch.context() as m:
+        m.setattr(kg.pipeline, "connected_components", _boom)
+        with pytest.raises(RuntimeError, match="cc failed"):
+            run_pipeline_materialized(
+                spark, transcripts_df, catalog_df, alias_pairs_df, out
+            )
+    assert not os.path.exists(os.path.join(out, "_manifest_mapping.json"))
+
+    rerun = run_pipeline_materialized(
+        spark, transcripts_df, catalog_df, alias_pairs_df, out
+    )
+    assert rerun["manifests"]["raw_triples"].get("resumed") is True
+    assert rerun["manifests"]["linked_triples"].get("resumed") is True
+    assert rerun["manifests"]["mapping"].get("resumed") is None
+    assert list(rerun["manifests"]) == list(STAGES)
+    fresh = run_pipeline_materialized(
+        spark, transcripts_df, catalog_df, alias_pairs_df, str(tmp_path / "kgout_fresh")
+    )
+    pd.testing.assert_frame_equal(_edges_pdf(rerun), _edges_pdf(fresh))
+    assert list(rerun["qa"].items()) == list(fresh["qa"].items())
+
+
+def test_build_jobs_inherit_job_group(
+    spark, transcripts_df, catalog_df, alias_pairs_df, last_job_id, tmp_path
+):
+    """Every job a build starts, on the caller's thread or a worker
+    thread, carries the job group the caller set."""
+    sc = spark.sparkContext
+    before = last_job_id()
+    sc.setJobGroup("g", "grouped build")
+    try:
+        run_pipeline_materialized(
+            spark, transcripts_df, catalog_df, alias_pairs_df, str(tmp_path / "kgout_g")
+        )
+    finally:
+        sc._jsc.clearJobGroup()
+    last_job_id()  # drain the listener bus
+    jobs = sc._jsc.sc().statusStore().jobsList(None)
+    groups = {}
+    it = jobs.iterator()
+    while it.hasNext():
+        j = it.next()
+        if j.jobId() > before:
+            g = j.jobGroup()
+            groups[j.jobId()] = g.get() if g.isDefined() else None
+    assert groups and set(groups.values()) == {"g"}, groups

@@ -330,3 +330,72 @@ def test_incremental_stats_are_exact(
         assert cst["n_new_alias_files"] == len(files)
         assert cst["n_delta_edges"] == spark.read.parquet(*files).count()
     assert stats[0][0]["n_state_edges"] < stats[1][0]["n_state_edges"]
+
+
+def test_incremental_mention_free_refresh(
+    spark, transcripts_pdf, catalog_pdf, catalog_df, alias_pairs_pdf, alias_pairs_df,
+    tmp_path,
+):
+    """A micro-batch whose turns yield no triples writes no epoch
+    directory of triples; its edge delta is empty, the stream goes on,
+    and the edges after the next refresh equal the oracle's."""
+    from kg.oracle import oracle_edges
+
+    feed = tmp_path / "qfeed"
+    feed.mkdir()
+    out = str(tmp_path / "qout")
+    convs = sorted(transcripts_pdf["conv_id"].unique())
+    quiet = transcripts_pdf.head(2).copy()
+    quiet["conv_id"] = "conv-quiet"
+    quiet["role"] = "user"
+    quiet["text"] = "nothing to link here"
+    quiet["tool"] = pd.array([None] * len(quiet), dtype="string")
+    parts = [
+        transcripts_pdf[transcripts_pdf["conv_id"].isin(convs[:30])],
+        quiet,
+        transcripts_pdf[transcripts_pdf["conv_id"].isin(convs[30:])],
+    ]
+    for k, part in enumerate(parts):
+        part.to_parquet(str(feed / f"r{k}.parquet"), index=False,
+                        coerce_timestamps="us", allow_truncated_timestamps=True)
+        res = run_incremental(spark, str(feed), catalog_df, alias_pairs_df, out)
+        assert res["epochs"] == 1
+    epoch = res["edge_stats"][0]["epoch"]
+    assert not os.path.exists(
+        os.path.join(out, "canonical_triples_stream", f"epoch={epoch - 1}"))
+
+    key = ["src", "dst", "rel_type", "stoichiometry", "order"]
+    got = _edges_key(res["edges"])
+    want = oracle_edges(pd.concat(parts, ignore_index=True), catalog_pdf, alias_pairs_pdf)
+    want = want[key].sort_values(key).reset_index(drop=True).astype(got.dtypes.to_dict())
+    assert got.equals(want)
+
+
+def test_incremental_driver_tables_are_local_relations(
+    spark, transcripts_pdf, catalog_df, tmp_path, monkeypatch
+):
+    """The incremental path's driver-built tables reach the JVM as
+    LocalRelations: the empty mapping used before any alias file lands,
+    and the empty edge table of a drain with no input."""
+    import kg.streaming
+
+    def kind(df) -> str:
+        return df._jdf.queryExecution().optimizedPlan().getClass().getSimpleName()
+
+    empty = tmp_path / "empty"
+    empty.mkdir()
+    res = run_incremental(spark, str(empty), catalog_df, str(empty), str(tmp_path / "o1"))
+    assert res["epochs"] == 0 and kind(res["edges"]) == "LocalRelation"
+
+    mappings = []
+    real = kg.streaming.apply_canonical_map
+
+    def spy(linked, mapping):
+        mappings.append(kind(mapping))
+        return real(linked, mapping)
+
+    monkeypatch.setattr(kg.streaming, "apply_canonical_map", spy)
+    feed = tmp_path / "feed"
+    _write_chunks(transcripts_pdf.head(20), str(feed), n_chunks=1)
+    res = run_incremental(spark, str(feed), catalog_df, str(empty), str(tmp_path / "o2"))
+    assert res["epochs"] == 1 and mappings == ["LocalRelation"]
