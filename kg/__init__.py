@@ -5,7 +5,7 @@ Re-expresses the dataflow of reactome/graph-importer (reference at
 over multi-turn transcript tables:
 
   1. extract.py      — vectorized pandas/Arrow-UDF mention + triple extraction
-  2. link.py         — blocking-key entity linking (size-gated broadcast join)
+  2. link.py         — blocking-key entity linking (one left join; Spark picks the strategy)
   3. canonicalize.py — connected-components alias merging (large-star/small-star)
   4. materialize.py  — kg.nodes / kg.edges tables + lineage + QA
 

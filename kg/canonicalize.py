@@ -196,9 +196,10 @@ def update_connected_components(
     The returned mapping is normalized to non-identity rows (node ≠
     canonical_id) — apply_canonical_map's coalesce supplies identity —
     which keeps the state table at one row per MERGED node rather than
-    per node ever seen.  The contracted-component mapping is broadcast
-    when it fits (it is delta-sized); the composition join against the
-    big previous mapping is then map-side, no shuffle of the state.
+    per node ever seen.  The contracted-component mapping is delta-sized,
+    so Spark's size rule usually broadcasts it; the composition join
+    against the big previous mapping is then map-side, no shuffle of the
+    state.
 
     Callers iterating this per micro-batch should localCheckpoint() the
     result each round to truncate the growing composition lineage.
@@ -225,8 +226,6 @@ def update_connected_components(
     c = c.select(
         F.col("node").alias("rep"), F.col("canonical_id").alias("new_rep")
     )
-    if _fits_broadcast(c, None):
-        c = F.broadcast(c)
     updated = (
         m.join(c, m["canonical_id"] == c["rep"], "left")
         .select(
@@ -252,47 +251,22 @@ def update_connected_components(
     )
 
 
-def _fits_broadcast(df: DataFrame, threshold: int | None) -> bool:
-    """Row-count gate for broadcast decisions: one cheap limit+count.
-
-    threshold=None reads spark.kg.broadcastRowThreshold (default 4M rows ≈
-    a few hundred MB of (node, canonical_id) strings — executor-safe)."""
-    from kg.probes import rows_at_most
-
-    if threshold is None:
-        threshold = int(
-            df.sparkSession.conf.get("spark.kg.broadcastRowThreshold", "4000000")
-        )
-    if threshold <= 0:
-        return False
-    return rows_at_most(df, threshold)
-
-
-def apply_canonical_map(
-    linked_triples: DataFrame,
-    mapping: DataFrame,
-    broadcast_threshold: int | None = None,
-) -> DataFrame:
+def apply_canonical_map(linked_triples: DataFrame, mapping: DataFrame) -> DataFrame:
     """Rewrite subj_id/obj_id to canonical ids; absent ids map to themselves.
 
     The mapping has one row per node of the ALIAS graph — usually a dim,
-    but at 10^9 alias nodes it outgrows broadcast.  Size-gate: broadcast
-    below broadcast_threshold rows, else a plain shuffle join (AQE skew
-    splitting, enabled in kg/session.py, handles Zipfian-hot canonical
-    ids on the probe side)."""
-    m = (
-        F.broadcast(mapping)
-        if _fits_broadcast(mapping, broadcast_threshold)
-        else mapping
-    )
+    but at 10^9 alias nodes it outgrows broadcast.  Spark picks the join:
+    a mapping under spark.sql.autoBroadcastJoinThreshold is broadcast, a
+    larger one is a shuffle join, where AQE skew splitting (enabled in
+    kg/session.py) handles Zipfian-hot canonical ids on the probe side."""
     return (
         linked_triples.join(
-            m.select(F.col("node").alias("subj_id"), F.col("canonical_id").alias("subj_c")),
+            mapping.select(F.col("node").alias("subj_id"), F.col("canonical_id").alias("subj_c")),
             "subj_id",
             "left",
         )
         .join(
-            m.select(F.col("node").alias("obj_id"), F.col("canonical_id").alias("obj_c")),
+            mapping.select(F.col("node").alias("obj_id"), F.col("canonical_id").alias("obj_c")),
             "obj_id",
             "left",
         )

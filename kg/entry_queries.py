@@ -40,6 +40,22 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
 
 
+def _fits_broadcast(df: DataFrame, threshold: int | None) -> bool:
+    """Row-count gate for broadcast decisions: one cheap limit+count.
+
+    threshold=None reads spark.kg.broadcastRowThreshold (default 4M rows ≈
+    a few hundred MB of (node, canonical_id) strings — executor-safe)."""
+    from kg.probes import rows_at_most
+
+    if threshold is None:
+        threshold = int(
+            df.sparkSession.conf.get("spark.kg.broadcastRowThreshold", "4000000")
+        )
+    if threshold <= 0:
+        return False
+    return rows_at_most(df, threshold)
+
+
 # =========================================================================
 # A. Aggregations (SURVEY §2.4) + windows (§2.5)
 # =========================================================================
@@ -264,8 +280,6 @@ def j1_endpoint_resolution(spark, sf_dir):
     per-order counts ≡ count of joined rows), so the shuffle moves one
     row per order, not one per lineitem.  Same rows either way — oracle
     hash unchanged, branch equality asserted in tests."""
-    from kg.canonicalize import _fits_broadcast
-
     li, o, c = (_t(spark, sf_dir, t) for t in ("lineitem", "orders", "customer"))
     cdim = c.select("c_custkey", "c_nationkey")
     if _fits_broadcast(c, None):

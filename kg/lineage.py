@@ -115,17 +115,23 @@ def write_stage(
     return manifest
 
 
+def read_manifest(out_dir: str, stage: str) -> dict:
+    """The manifest write_stage recorded for a stage."""
+    with open(_manifest_path(out_dir, stage)) as f:
+        return json.load(f)
+
+
 def read_stage(spark: SparkSession, out_dir: str, stage: str) -> DataFrame:
     """A written stage, read with the schema its manifest records (no
     schema-inference job)."""
-    with open(_manifest_path(out_dir, stage)) as f:
-        schema = T.StructType.fromJson(json.load(f)["schema"])
+    schema = T.StructType.fromJson(read_manifest(out_dir, stage)["schema"])
     return spark.read.schema(schema).parquet(os.path.join(out_dir, stage))
 
 
 __all__ = [
     "write_stage",
     "read_stage",
+    "read_manifest",
     "stage_is_complete",
     "PIPELINE_FORMAT",
 ]

@@ -7,15 +7,15 @@ interactor accession to an existing node or creating a new one
 (InteractionImporter.java:100-137,196-273).  The reference does this as a
 per-row SQLite probe loop; here it is ONE declarative join:
 
-    mentions ⟕ broadcast(catalog-keyed-by-blocking-key)
+    mentions ⟕ catalog-keyed-by-blocking-key
     hit  ⇒ catalog entity_id        (ambiguity resolved min(entity_id))
     miss ⇒ minted deterministic id  ("new:<key>" / "tool:<name>")
 
-The catalog is a dimension (≪ probe side) ⇒ broadcast hash join: zero
-shuffle of the 10^12-row probe side, and broadcast is inherently
-skew-immune (a Zipfian-hot key never concentrates on one reducer because
-there is no reducer).  A catalog that outgrows the broadcast gate falls
-back to a shuffle join, where AQE skew-splits hot keys.
+The physical join is Spark's choice: kg carries no hints and no size
+probes.  A catalog index under spark.sql.autoBroadcastJoinThreshold
+(64 MB, kg/session.py) is broadcast — no shuffle of the probe side, and
+no reducer for a Zipfian-hot key to overload; a larger one is a shuffle
+join, where AQE (enabled in kg/session.py) skew-splits hot keys.
 """
 
 from __future__ import annotations
@@ -72,24 +72,15 @@ def link_surfaces(
     surfaces: DataFrame,
     catalog: DataFrame,
     surface_col: str = "surface",
-    broadcast_threshold: int | None = None,
 ) -> DataFrame:
     """Probe (J3): map each distinct surface to an entity_id.
 
     Returns (surface, blocking_key, entity_id, is_minted).  Linking on the
     *distinct* surfaces (tiny vs. the triple stream) then rejoining keeps
     the expensive work proportional to vocabulary, not corpus, size.
-
-    The index broadcast is size-gated on the exploded alias count (a cheap
-    scan that upper-bounds the index rows); an over-threshold catalog falls
-    back to a shuffle join.
+    Spark picks the join strategy from the index's estimated size.
     """
-    from kg.canonicalize import _fits_broadcast
-
     index = build_link_index(catalog)
-    aliases = catalog.select(F.explode("aliases").alias("a"))
-    if _fits_broadcast(aliases, broadcast_threshold):
-        index = F.broadcast(index)
     probe = surfaces.select(F.col(surface_col).alias("surface")).distinct()
     probe = probe.withColumn("blocking_key", norm_key(F.col("surface")))
     joined = probe.join(index, "blocking_key", "left")
@@ -101,11 +92,7 @@ def link_surfaces(
     )
 
 
-def link_vocab(
-    raw_triples: DataFrame,
-    catalog: DataFrame,
-    broadcast_threshold: int | None = None,
-) -> DataFrame:
+def link_vocab(raw_triples: DataFrame, catalog: DataFrame) -> DataFrame:
     """The (surface, blocking_key, entity_id, is_minted) vocabulary of a
     raw-triple stream.  A caller that also inspects the vocabulary passes
     it to link_triples(surface_map=...) so the linking work happens
@@ -114,13 +101,12 @@ def link_vocab(
         raw_triples.select(F.col("subj_surface").alias("surface"))
         .unionByName(raw_triples.select(F.col("obj_surface").alias("surface")))
     )
-    return link_surfaces(surf, catalog, broadcast_threshold=broadcast_threshold)
+    return link_surfaces(surf, catalog)
 
 
 def link_triples(
     raw_triples: DataFrame,
     catalog: DataFrame,
-    broadcast_threshold: int | None = None,
     surface_map: DataFrame | None = None,
 ) -> DataFrame:
     """Rewrite raw surface triples to entity-id triples.
@@ -128,41 +114,24 @@ def link_triples(
     The (surface → entity_id) map is derived from the distinct surfaces of
     the triple stream itself — usually vocabulary-sized, but a high-
     surface-cardinality corpus (code snippets, ids) is not a dimension.
-    Both rejoins are size-gated on the map's exact row count (free: the
-    eager persist fill below already counts it); above the gate they run
-    as plain shuffle joins, where AQE skew-splits Zipfian-hot surfaces.
+    Spark picks both rejoins' strategy: the map is cached and counted
+    first, so its size statistics are exact, and a map under
+    spark.sql.autoBroadcastJoinThreshold is broadcast; a larger one is a
+    shuffle join, where AQE skew-splits Zipfian-hot surfaces.
     """
-    # The map is built by link_surfaces unconditionally: its probe side is
-    # the DISTINCT vocabulary (each key once ⇒ no probe-side skew to
-    # salt), and its index side is already gated inside link_surfaces.
     # A caller that already holds the vocabulary (link_vocab) passes it
     # in to avoid recomputing.
-    mapped = (
-        surface_map
-        if surface_map is not None
-        else link_vocab(raw_triples, catalog, broadcast_threshold=broadcast_threshold)
-    )
+    mapped = surface_map if surface_map is not None else link_vocab(raw_triples, catalog)
     # persist + EAGER fill: the map feeds TWO exchanges (subj + obj) whose
     # plans differ by rename, so ReuseExchange can't kick in; worse,
     # broadcast exchanges materialize on CONCURRENT driver threads, so a
     # lazy persist lets both race and compute the vocabulary distinct
     # (and the upstream extraction) simultaneously — observed as 3×
     # duplicated extraction stages in the event log.  One count() forces a
-    # single computation; both joins then read the cache — AND that same
-    # count is the broadcast gate for the rejoins (a separate
-    # limit+count probe of the distinct vocabulary costs a full extra
-    # pass over the corpus surfaces; measured as a visible slice of the
-    # link wall at 60M turns).
+    # single computation; both joins then read the cache, whose statistics
+    # the planner sizes the joins from.
     smap = mapped.select("surface", "entity_id").persist()
-    n_map = smap.count()
-    if broadcast_threshold is None:
-        broadcast_threshold = int(
-            raw_triples.sparkSession.conf.get("spark.kg.broadcastRowThreshold", "4000000")
-        )
-    vocab_small = broadcast_threshold > 0 and n_map <= broadcast_threshold
-
-    def _side(df: DataFrame) -> DataFrame:
-        return F.broadcast(df) if vocab_small else df
+    smap.count()
 
     # r6 (guide §2.4 "remove shuffles outright"): join on an explicit
     # condition against the UN-renamed cached map for both sides — the
@@ -173,10 +142,8 @@ def link_triples(
     # build, one ship).  Same join keys, same rows.
     s1, s2 = smap.alias("_s1"), smap.alias("_s2")
     return (
-        raw_triples.join(
-            _side(s1), F.col("subj_surface") == F.col("_s1.surface")
-        )
-        .join(_side(s2), F.col("obj_surface") == F.col("_s2.surface"))
+        raw_triples.join(s1, F.col("subj_surface") == F.col("_s1.surface"))
+        .join(s2, F.col("obj_surface") == F.col("_s2.surface"))
         .select(
             "conv_id",
             "turn_idx",

@@ -79,12 +79,12 @@ def run(argv: list[str] | None = None, spark=None) -> dict:
     summary = {
         "out_dir": args.out,
         "wall_sec": wall,
-        "edges": res["edges"].count(),
-        "nodes": res["nodes"].count(),
+        "edges": res["manifests"]["edges"]["rows"],
+        "nodes": res["manifests"]["nodes"]["rows"],
         "qa": res["qa"],
         "stages": {
-            name: {"rows": m.get("rows"), "resumed": m.get("resumed", False)}
-            for name, m in res.get("manifests", {}).items()
+            name: {"rows": m["rows"], "resumed": m.get("resumed", False)}
+            for name, m in res["manifests"].items()
         },
         "tasks_observed": reporter.total_tasks_seen() if reporter else None,
     }

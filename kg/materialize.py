@@ -175,7 +175,6 @@ def build_nodes(
     catalog: DataFrame,
     mapping: DataFrame,
     input_snapshot: str | None = None,
-    broadcast_threshold: int | None = None,
     top_level_ids: DataFrame | None = None,
     db_info: dict | None = None,
 ) -> DataFrame:
@@ -183,27 +182,16 @@ def build_nodes(
 
     schema_class comes from the catalog entity_type of the component
     representative; minted/tool ids get synthetic classes.  Labels are the
-    class-ancestry array from the broadcast ENTITY_TYPE_LABELS map (P8
-    analog, ReactomeBatchImporter.java:836-868); node_id is the
-    deterministic xxhash64 of canonical_id (SURVEY.md §1.4 visited-map row).
+    class-ancestry array from the ENTITY_TYPE_LABELS map (P8 analog,
+    ReactomeBatchImporter.java:836-868); node_id is the deterministic
+    xxhash64 of canonical_id (SURVEY.md §1.4 visited-map row).
 
     The catalog, the CC mapping, and the top-level flag set are usually
-    dimensions, but none is guaranteed to be: all three joins are
-    size-gated (row-count probe vs spark.kg.broadcastRowThreshold); above
-    the gate they fall back to shuffle joins, which AQE skew-splits if
-    the keys are hot.  Only the constant entity-type→labels map is
-    broadcast unconditionally (fixed, ~5 rows).
+    dimensions, but none is guaranteed to be: Spark picks every join's
+    strategy from its size estimate (broadcast under
+    spark.sql.autoBroadcastJoinThreshold, else a shuffle join that AQE
+    skew-splits if the keys are hot).
     """
-    from kg.canonicalize import _fits_broadcast
-
-    # probe the RAW inputs (cheap scans), not derived plans: `cat` below has
-    # ≤ 1 row per catalog row, so catalog's count bounds it.
-    _map_small = _fits_broadcast(mapping, broadcast_threshold)
-    _cat_small = _fits_broadcast(catalog, broadcast_threshold)
-
-    def _maybe_bcast(df: DataFrame, small: bool) -> DataFrame:
-        return F.broadcast(df) if small else df
-
     ids = (
         canonical_triples.select(F.col("subj_id").alias("canonical_id"))
         .unionByName(canonical_triples.select(F.col("obj_id").alias("canonical_id")))
@@ -213,7 +201,7 @@ def build_nodes(
     # a merged alias, so push catalog attrs through the CC mapping first.
     cat = (
         catalog.join(
-            _maybe_bcast(mapping, _map_small).withColumnRenamed("node", "entity_id"),
+            mapping.withColumnRenamed("node", "entity_id"),
             "entity_id",
             "left",
         )
@@ -238,10 +226,8 @@ def build_nodes(
         )
     )
     spark = canonical_triples.sparkSession
-    labels_df = F.broadcast(
-        local_table(spark, list(ENTITY_TYPE_LABELS.items()), LABELS_SCHEMA)
-    )
-    n = ids.join(_maybe_bcast(cat, _cat_small), "canonical_id", "left")
+    labels_df = local_table(spark, list(ENTITY_TYPE_LABELS.items()), LABELS_SCHEMA)
+    n = ids.join(cat, "canonical_id", "left")
     n = n.withColumn(
         "schema_class",
         F.when(F.col("entity_type").isNotNull(), F.col("entity_type"))
@@ -267,12 +253,8 @@ def build_nodes(
         flags = top_level_ids.select("canonical_id").distinct().withColumn(
             "_is_tlp", F.lit(True)
         )
-        # gate like the others: the flag set derives from the CC mapping
-        # (≤ one row per component), so the mapping probe is a cheap
-        # conservative bound — at 10^9 alias nodes this falls back to a
-        # shuffle join instead of OOMing the driver on the broadcast.
         n = (
-            n.join(_maybe_bcast(flags, _map_small), "canonical_id", "left")
+            n.join(flags, "canonical_id", "left")
             .withColumn(
                 "labels",
                 F.when(

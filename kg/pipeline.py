@@ -26,7 +26,7 @@ from pyspark.util import inheritable_thread_target
 
 from kg.canonicalize import apply_canonical_map, connected_components
 from kg.extract import extract_triples
-from kg.lineage import read_stage, stage_is_complete, write_stage
+from kg.lineage import read_manifest, read_stage, stage_is_complete, write_stage
 from kg.link import link_triples
 from kg.materialize import (
     build_edges,
@@ -162,7 +162,8 @@ def run_pipeline_materialized(
     Stage granularity matches the reference's four import phases
     (ReactomeBatchImporter.java:145-149 ordered worklist); each stage is
     an atomic overwrite, so a crash between stages resumes exactly at the
-    first incomplete stage (tested in tests/test_resume.py).
+    first incomplete stage (tested in tests/test_resume.py).  A resumed
+    stage reports the manifest it was written with, plus resumed=True.
 
     Stages that do not read each other run side by side, one branch on
     the caller's thread and one on a worker thread, so their Spark jobs
@@ -186,7 +187,7 @@ def run_pipeline_materialized(
 
     def _stage(name: str, build) -> DataFrame:
         if resume and stage_is_complete(out_dir, name, snap):
-            manifests[name] = {"stage": name, "resumed": True}
+            manifests[name] = {**read_manifest(out_dir, name), "resumed": True}
             return read_stage(spark, out_dir, name)
         df = build()
         manifests[name] = write_stage(

@@ -1,7 +1,8 @@
 """Bounded driver-side row-count probes (r6).
 
-Several operators dispatch on input size (the extract path, the CC
-driver/distributed split, broadcast gates).  The r5 probe was always a
+Two KG operators dispatch on input size (the extract path and the CC
+driver/distributed split), as does the off-path contract query
+``j1_endpoint_resolution``; join strategies are left to Spark.  The r5 probe was always a
 ``df.limit(thr + 1).count()`` job — bounded, but a full Spark job with
 scheduler latency, measured as a visible slice of the pipeline wall at
 bench scale (~0.3s per probe).  Two cases need no job at all:

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import contextlib
+
 import pandas as pd
 import pytest
 
@@ -61,3 +63,31 @@ def last_job_id(spark):
         return max(jobs.head().jobId(), jobs.last().jobId()) if jobs.size() else -1
 
     return _last
+
+
+@pytest.fixture(scope="session")
+def no_auto_broadcast(spark):
+    """Context manager: within it Spark broadcasts no join side, because
+    both size rules (the planner's and AQE's) are set to -1; on exit both
+    settings are restored.  Queries must run inside it to be planned
+    under it."""
+    keys = (
+        "spark.sql.autoBroadcastJoinThreshold",
+        "spark.sql.adaptive.autoBroadcastJoinThreshold",
+    )
+
+    @contextlib.contextmanager
+    def _off():
+        prev = {k: spark.conf.get(k, None) for k in keys}
+        for k in keys:
+            spark.conf.set(k, "-1")
+        try:
+            yield
+        finally:
+            for k, v in prev.items():
+                if v is None:
+                    spark.conf.unset(k)
+                else:
+                    spark.conf.set(k, v)
+
+    return _off

@@ -76,3 +76,28 @@ def test_release_pipeline_unpersists(spark, transcripts_df, catalog_df, alias_pa
     release_pipeline(res)
     assert not res["raw_triples"].storageLevel.useMemory
     assert not res["canonical_triples"].storageLevel.useMemory
+
+
+def test_materialized_pipeline_without_broadcast_equals_default(
+    spark, transcripts_df, catalog_df, alias_pairs_df, no_auto_broadcast, tmp_path
+):
+    """Every KG join's strategy is Spark's choice, so a build with
+    Spark's broadcast size rules off (every join a shuffle join) writes
+    the same nodes and edges as a default build."""
+    from kg.pipeline import run_pipeline_materialized
+
+    def build(out: str) -> tuple[list, list]:
+        res = run_pipeline_materialized(
+            spark, transcripts_df, catalog_df, alias_pairs_df, str(tmp_path / out)
+        )
+        assert all(v == 0 for v in res["qa"].values())
+        return (
+            sorted(map(tuple, res["nodes"].drop("properties").collect())),
+            sorted(map(tuple, res["edges"].collect())),
+        )
+
+    nodes, edges = build("default")
+    with no_auto_broadcast():
+        forced_nodes, forced_edges = build("forced")
+    assert forced_nodes == nodes
+    assert forced_edges == edges

@@ -1,5 +1,5 @@
 """Stage-2 linking unit tests (SURVEY.md §5: blocking-key normalization;
-broadcast-gated join equivalence to the shuffle join)."""
+broadcast and shuffle plans of the link joins agree)."""
 
 from __future__ import annotations
 
@@ -49,26 +49,38 @@ def test_hit_links_to_catalog(spark, catalog_df, catalog_pdf):
     assert not row["is_minted"]
 
 
-def test_link_triples_gate_over_threshold(spark, catalog_df, transcripts_df):
-    """Size gate on the surface map: broadcast_threshold=1 forces the
-    shuffle-join path; output identical to the broadcast
-    default, and the forced plan contains no kg-issued broadcast of the
-    map (mirror of test_canonicalize's apply_canonical_map gate test)."""
+def test_link_triples_gate_over_threshold(
+    spark, catalog_df, transcripts_df, no_auto_broadcast
+):
+    """Over Spark's broadcast size rules (forced to -1 here) the index
+    join and both surface-map rejoins run as shuffle joins; the output
+    equals the default plan's, and no plan carries a kg-issued hint.
+    link_triples leaves its surface map cached, and any later plan over
+    the same input reuses that cache (with the joins it was built by),
+    so each run starts from an empty cache."""
     from kg.extract import extract_triples
     from kg.link import link_triples
 
-    raw = extract_triples(transcripts_df).persist()
-    raw.count()
     cols = ["conv_id", "turn_idx", "span_start", "subj_id", "pred", "obj_id"]
-    bcast = link_triples(raw, catalog_df)
-    forced = link_triples(raw, catalog_df, broadcast_threshold=1)
-    assert sorted(map(tuple, bcast.select(*cols).collect())) == sorted(
-        map(tuple, forced.select(*cols).collect())
-    )
-    # the gate must strip the broadcast hint from the logical plan
-    logical = forced._jdf.queryExecution().optimizedPlan().toString()
-    assert "ResolvedHint" not in logical
-    raw.unpersist()
+
+    def run():
+        spark.catalog.clearCache()
+        raw = extract_triples(transcripts_df).persist()
+        raw.count()
+        out = link_triples(raw, catalog_df)
+        rows = sorted(map(tuple, out.select(*cols).collect()))
+        qe = out._jdf.queryExecution()
+        plans = qe.executedPlan().toString(), qe.analyzed().toString()
+        raw.unpersist()
+        return rows, plans
+
+    expected, (_, default_analyzed) = run()
+    with no_auto_broadcast():
+        got, (plan, forced_analyzed) = run()
+    spark.catalog.clearCache()
+    assert got == expected
+    assert "BroadcastHashJoin" not in plan and "SortMergeJoin" in plan
+    assert "ResolvedHint" not in default_analyzed + forced_analyzed
 
 
 def test_link_rejoins_share_one_broadcast(spark):

@@ -26,10 +26,16 @@ def test_cli_runs_pipeline_and_prints_summary(spark, tmp_path, capsys):
     assert set(summary["stages"]) >= {"raw_triples", "nodes", "edges"}
     assert not any(st["resumed"] for st in summary["stages"].values())
 
-    # --resume reuses every completed stage
+    assert all(st["rows"] is not None for st in summary["stages"].values())
+
+    # --resume reuses every completed stage and reports its stored rows
     summary2 = run(argv + ["--resume"], spark=spark)
     assert summary2["edges"] == summary["edges"]
+    assert summary2["nodes"] == summary["nodes"]
     assert all(st["resumed"] for st in summary2["stages"].values())
+    assert {k: st["rows"] for k, st in summary2["stages"].items()} == {
+        k: st["rows"] for k, st in summary["stages"].items()
+    }
 
 
 def test_cli_parser_defaults():

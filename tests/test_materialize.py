@@ -97,10 +97,11 @@ def test_qa_consistency_flags_mandatory_nulls(spark):
     assert "dst" not in rep
 
 
-def test_build_nodes_shuffle_path_equals_broadcast(spark, catalog_df):
-    """Size-gated catalog/mapping broadcasts: forcing the shuffle path
-    (threshold=0) yields byte-identical node rows."""
-    from kg.materialize import build_nodes
+def test_build_nodes_shuffle_path_equals_broadcast(spark, catalog_df, no_auto_broadcast):
+    """With Spark's broadcast size rules off, every node join (catalog,
+    mapping, labels, top-level flags) runs as a shuffle join; the node
+    rows equal the default plan's, and no plan carries a hint."""
+    from kg.materialize import build_nodes, top_level_component_ids
 
     canonical = spark.createDataFrame(
         [("c1", 0, 0, "cat:Q00000", "p", "new:thing"),
@@ -110,11 +111,23 @@ def test_build_nodes_shuffle_path_equals_broadcast(spark, catalog_df):
     mapping = spark.createDataFrame(
         [("cat:Q00001", "cat:Q00000")], "node string, canonical_id string"
     )
-    a = build_nodes(canonical, catalog_df, mapping, broadcast_threshold=10_000)
-    b = build_nodes(canonical, catalog_df, mapping, broadcast_threshold=0)
-    ka = sorted(map(tuple, a.drop("properties").collect()))
-    kb = sorted(map(tuple, b.drop("properties").collect()))
-    assert ka == kb
+
+    def nodes():
+        return build_nodes(
+            canonical, catalog_df, mapping,
+            top_level_ids=top_level_component_ids(mapping),
+        ).drop("properties")
+
+    default = nodes()
+    expected = sorted(map(tuple, default.collect()))
+    with no_auto_broadcast():
+        forced = nodes()
+        got = sorted(map(tuple, forced.collect()))
+        plan = forced._jdf.queryExecution().executedPlan().toString()
+    assert got == expected
+    assert "BroadcastHashJoin" not in plan and "SortMergeJoin" in plan
+    for df in (default, forced):
+        assert "ResolvedHint" not in df._jdf.queryExecution().analyzed().toString()
 
 
 def test_top_level_relabel_appends_label_and_overrides_class(spark, catalog_df):
