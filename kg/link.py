@@ -122,7 +122,8 @@ def link_triples(
     # A caller that already holds the vocabulary (link_vocab) passes it
     # in to avoid recomputing.
     mapped = surface_map if surface_map is not None else link_vocab(raw_triples, catalog)
-    # persist + EAGER fill: the map feeds TWO exchanges (subj + obj) whose
+    # persist + EAGER fill (the runners release it with
+    # release_surface_map): the map feeds TWO exchanges (subj + obj) whose
     # plans differ by rename, so ReuseExchange can't kick in; worse,
     # broadcast exchanges materialize on CONCURRENT driver threads, so a
     # lazy persist lets both race and compute the vocabulary distinct
@@ -155,11 +156,21 @@ def link_triples(
     )
 
 
+def release_surface_map(raw_triples: DataFrame, catalog: DataFrame) -> None:
+    """Drop the surface map that link_triples(raw_triples, catalog)
+    cached; call it once the linked triples are written.  Spark keys its
+    cache by plan, so the rebuilt plan of the same map finds the cached
+    copy; with nothing cached (the linked stage was resumed) it does
+    nothing."""
+    link_vocab(raw_triples, catalog).select("surface", "entity_id").unpersist()
+
+
 __all__ = [
     "norm_key",
     "build_link_index",
     "link_surfaces",
     "link_triples",
+    "release_surface_map",
     "link_vocab",
     "MINTED_PREFIX",
     "TOOL_ENTITY_PREFIX",

@@ -380,10 +380,12 @@ def near_dup_clusters(
 
     Scale shape: pairs are LSH-bounded; CC reuses kg.canonicalize
     (driver union-find under 100k edges — dup graphs are tiny relative
-    to the corpus — else the O(log n) star fixpoint); everything after
-    is one window over clustered docs only.  Docs in no pair are their
-    own singleton cluster via the left join + coalesce, never entering
-    the CC or the window.
+    to the corpus — else the O(log n) star fixpoint); the keeper
+    election runs over clustered docs only, as a groupBy cluster_id of
+    min(struct(-n_chars, doc_id)) joined back to the cluster's docs.
+    Docs in no pair are their own singleton cluster and keeper: a left
+    anti-join against the CC mapping finds them, so they never enter
+    the CC or the election.
     """
     from kg.canonicalize import connected_components
 

@@ -5,15 +5,15 @@ raw_triples × catalog ──Stage2 link──▶ linked_triples
 alias_pairs ──Stage3 CC──▶ canonical mapping ──▶ canonical_triples
 canonical_triples ──Stage4──▶ kg.nodes / kg.edges (+ QA + manifests)
 
-Two run modes:
-- run_pipeline(...): in-memory DataFrames end to end (tests, entry()).
-- run_pipeline_materialized(...): every stage lands in parquet with a
-  manifest; completed stages (same input snapshot and pipeline format,
-  kg.lineage.PIPELINE_FORMAT) are skipped on rerun — the
-  checkpointed-resumability contract of the north_rule.  Stages that do
-  not read each other run side by side: CC beside extract → link, nodes
-  beside edges, node QA and the discarded count beside edge QA; worker
-  threads inherit the caller's job group, description and tags.
+run_pipeline_materialized(...) is the one batch runner: every stage
+lands in parquet with a manifest, and completed stages (same input
+snapshot and pipeline format, kg.lineage.PIPELINE_FORMAT) are skipped on
+rerun — the checkpointed-resumability contract of the north_rule.
+Consumers that only read a build (the driver contract's entry(), the
+tests) run it into a temporary directory.  Stages that do not read each
+other run side by side: CC beside extract → link, nodes beside edges,
+node QA and the discarded count beside edge QA; worker threads inherit
+the caller's job group, description and tags.
 """
 
 from __future__ import annotations
@@ -27,7 +27,7 @@ from pyspark.util import inheritable_thread_target
 from kg.canonicalize import apply_canonical_map, connected_components
 from kg.extract import extract_triples
 from kg.lineage import read_manifest, read_stage, stage_is_complete, write_stage
-from kg.link import link_triples
+from kg.link import link_triples, release_surface_map
 from kg.materialize import (
     build_edges,
     build_nodes,
@@ -47,64 +47,6 @@ STAGES = (
     "nodes",
     "edges",
 )
-
-
-def run_pipeline(
-    spark: SparkSession,
-    transcripts: DataFrame,
-    catalog: DataFrame,
-    alias_pairs: DataFrame,
-    input_snapshot: str | None = None,
-) -> dict[str, DataFrame]:
-    """Mostly-lazy end-to-end plan (the CC fixpoint runs its own actions).
-
-    raw_triples and canonical_triples are persisted: each is consumed by
-    two downstream branches (linking probes the distinct surfaces of the
-    triples themselves; nodes and edges both read the canonical stream),
-    and without a persist Catalyst re-executes the pandas-UDF extraction
-    once per branch — measured 2× the stage-1 cost at bench scale.  The
-    materialized runner (below) gets the same effect from its per-stage
-    parquet writes instead.
-    """
-    raw = extract_triples(transcripts).persist()
-    raw.count()  # eager fill: see link_triples — concurrent broadcast
-    # threads would otherwise recompute the extraction UDF per exchange
-    linked = link_triples(raw, catalog)
-    mapping = connected_components(alias_pairs)  # has its own actions (fixpoint)
-    canonical = apply_canonical_map(linked, mapping).persist()
-    # TrackingObjects analog: the run's Person/InstanceEdit wiring becomes
-    # first-class graph edges next to the content edges
-    edges = build_edges(canonical).unionByName(provenance_edges(spark))
-    nodes = build_nodes(
-        canonical,
-        catalog,
-        mapping,
-        input_snapshot,
-        top_level_ids=top_level_component_ids(mapping),  # P9 analog
-        db_info={  # P10 analog: provenance as a first-class node
-            "name": "kg-pipeline",
-            "checksum": input_snapshot or "",
-            "engine": f"spark-{spark.version}",
-        },
-    )
-    return {
-        "raw_triples": raw,
-        "linked_triples": linked,
-        "mapping": mapping,
-        "canonical_triples": canonical,
-        "nodes": nodes,
-        "edges": edges,
-    }
-
-
-def release_pipeline(result: dict) -> None:
-    """Unpersist the DataFrames run_pipeline caches (raw_triples and
-    canonical_triples).  Call once downstream consumption is finished;
-    long-lived drivers that run many pipelines without releasing
-    accumulate cached blocks (the materialized runner needs no release —
-    its stages live in parquet, not the block manager)."""
-    for key in ("raw_triples", "canonical_triples"):
-        result[key].unpersist()
 
 
 def _qa_table(
@@ -207,6 +149,7 @@ def run_pipeline_materialized(
         )
         raw = _stage("raw_triples", lambda: extract_triples(transcripts))
         linked = _stage("linked_triples", lambda: link_triples(raw, catalog))
+        release_surface_map(raw, catalog)
         mapping = mapping_f.result()
         canonical = _stage(
             "canonical_triples", lambda: apply_canonical_map(linked, mapping)
@@ -252,9 +195,7 @@ def run_pipeline_materialized(
 
 
 __all__ = [
-    "run_pipeline",
     "run_pipeline_materialized",
-    "release_pipeline",
     "run_qa",
     "STAGES",
 ]

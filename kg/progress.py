@@ -56,7 +56,7 @@ class ProgressReporter:
     Usage::
 
         with ProgressReporter(spark, sink=print) as rep:
-            run_pipeline(...)
+            run_pipeline_materialized(...)
         rep.snapshots  # every observed (ts, [stage counters]) sample
 
     ``sink`` (if given) receives one rendered line per live stage per

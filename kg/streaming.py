@@ -35,7 +35,7 @@ from pyspark.sql import types as T
 
 from kg.canonicalize import apply_canonical_map, connected_components
 from kg.extract import extract_triples
-from kg.link import link_triples
+from kg.link import link_triples, release_surface_map
 from kg.probes import parquet_file_rows
 from kg.schema import MAPPING_SCHEMA, TRANSCRIPTS_SCHEMA
 from kg.session import local_table
@@ -184,6 +184,7 @@ def run_incremental(
              .option("partitionOverwriteMode", "dynamic")
              .parquet(triples_dir))
         finally:
+            release_surface_map(raw, catalog)
             raw.unpersist()
         _compact_edges(int(epoch_id), canonical.schema)
         epochs.append(int(epoch_id))

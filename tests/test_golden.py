@@ -7,13 +7,30 @@ including stoichiometry and order, and the QA constraints must hold.
 
 from __future__ import annotations
 
-from kg.oracle import oracle_edges, oracle_triples, precision_recall
-from kg.pipeline import run_pipeline, run_qa
+import pytest
+
+from kg.lineage import read_stage
+from kg.oracle import (
+    oracle_edges,
+    oracle_extract,
+    oracle_link_index,
+    oracle_resolve,
+    oracle_triples,
+    precision_recall,
+)
+from kg.pipeline import run_pipeline_materialized, run_qa
 
 
-def test_golden_triples_pr(spark, transcripts_df, catalog_df, alias_pairs_df,
-                           transcripts_pdf, catalog_pdf, alias_pairs_pdf):
-    res = run_pipeline(spark, transcripts_df, catalog_df, alias_pairs_df)
+@pytest.fixture(scope="module")
+def res(spark, transcripts_df, catalog_df, alias_pairs_df, tmp_path_factory):
+    """One materialized build, read by every test that only inspects it."""
+    out = str(tmp_path_factory.mktemp("golden"))
+    return run_pipeline_materialized(
+        spark, transcripts_df, catalog_df, alias_pairs_df, out
+    )
+
+
+def test_golden_triples_pr(res, transcripts_pdf, catalog_pdf, alias_pairs_pdf):
     edges = res["edges"].toPandas()
     got = set(zip(edges["src"], edges["rel_type"], edges["dst"]))
     exp = oracle_triples(transcripts_pdf, catalog_pdf, alias_pairs_pdf)
@@ -29,27 +46,24 @@ def test_golden_triples_pr(spark, transcripts_df, catalog_df, alias_pairs_df,
     assert a.equals(b)
 
 
-def test_qa_constraints_hold(spark, transcripts_df, catalog_df, alias_pairs_df):
-    res = run_pipeline(spark, transcripts_df, catalog_df, alias_pairs_df)
+def test_qa_constraints_hold(res):
     qa = run_qa(res["nodes"], res["edges"])
     assert all(v == 0 for v in qa.values()), qa
 
 
-def test_nodes_cover_edge_endpoints(spark, transcripts_df, catalog_df, alias_pairs_df):
-    res = run_pipeline(spark, transcripts_df, catalog_df, alias_pairs_df)
+def test_nodes_cover_edge_endpoints(res):
     nodes = {r["canonical_id"] for r in res["nodes"].select("canonical_id").collect()}
     edges = res["edges"].select("src", "dst").collect()
     endpoints = {r["src"] for r in edges} | {r["dst"] for r in edges}
     assert endpoints <= nodes
 
 
-def test_provenance_nodes_and_edges(spark, transcripts_df, catalog_df, alias_pairs_df):
+def test_provenance_nodes_and_edges(res):
     """TrackingObjects analog: every run writes the importer into the
     graph — Person + InstanceEdit nodes wired by author/created edges to
     the DBInfo node, all first-class rows in kg.nodes/kg.edges."""
     from kg.materialize import DB_INFO_ID, INSTANCE_EDIT_ID, PERSON_ID
 
-    res = run_pipeline(spark, transcripts_df, catalog_df, alias_pairs_df)
     nodes = {
         r["canonical_id"]: (r["schema_class"], tuple(r["labels"]))
         for r in res["nodes"].collect()
@@ -67,15 +81,28 @@ def test_provenance_nodes_and_edges(spark, transcripts_df, catalog_df, alias_pai
     }
 
 
-def test_release_pipeline_unpersists(spark, transcripts_df, catalog_df, alias_pairs_df):
-    from kg.pipeline import release_pipeline, run_pipeline
+def test_materialized_build_releases_its_cache(
+    spark, transcripts_df, catalog_df, alias_pairs_df, transcripts_pdf, catalog_pdf,
+    tmp_path,
+):
+    """A build caches nothing past its own end: as many RDDs are
+    persisted after it as before, and the linked stage, written while the
+    surface map was cached, equals the oracle's linking of the oracle's
+    extraction."""
+    persistent = spark.sparkContext._jsc.getPersistentRDDs
+    before = persistent().size()
+    out = str(tmp_path / "out")
+    run_pipeline_materialized(spark, transcripts_df, catalog_df, alias_pairs_df, out)
+    assert persistent().size() == before
 
-    res = run_pipeline(spark, transcripts_df, catalog_df, alias_pairs_df)
-    res["edges"].count()
-    assert res["raw_triples"].storageLevel.useMemory
-    release_pipeline(res)
-    assert not res["raw_triples"].storageLevel.useMemory
-    assert not res["canonical_triples"].storageLevel.useMemory
+    idx = oracle_link_index(catalog_pdf)
+    want = sorted(
+        (c, t, sp, oracle_resolve(s, idx), p, oracle_resolve(o, idx))
+        for c, t, sp, s, p, o in oracle_extract(transcripts_pdf)
+    )
+    cols = ["conv_id", "turn_idx", "span_start", "subj_id", "pred", "obj_id"]
+    got = sorted(map(tuple, read_stage(spark, out, "linked_triples").select(cols).collect()))
+    assert got == want
 
 
 def test_materialized_pipeline_without_broadcast_equals_default(
@@ -84,7 +111,6 @@ def test_materialized_pipeline_without_broadcast_equals_default(
     """Every KG join's strategy is Spark's choice, so a build with
     Spark's broadcast size rules off (every join a shuffle join) writes
     the same nodes and edges as a default build."""
-    from kg.pipeline import run_pipeline_materialized
 
     def build(out: str) -> tuple[list, list]:
         res = run_pipeline_materialized(

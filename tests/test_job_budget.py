@@ -9,7 +9,8 @@ manifests came from footers, QA and the input checksum became one
 aggregate each, and the incremental path stopped extracting twice
 (77 and 34), and before the KG joins left their strategy to Spark,
 which removed the row-count probes of the old broadcast gates (41 and
-24).
+24).  Releasing link's cached surface map once the linked triples are
+written costs no job: both counts were re-measured unchanged.
 Job ids are counted rather than job groups because the incremental work
 runs on the stream thread.
 """
@@ -57,8 +58,13 @@ def test_warm_refresh_job_budget(
     land(0)
     run_incremental(spark, str(feed), catalog_df, str(adir), out)
     land(1)
+    persistent = spark.sparkContext._jsc.getPersistentRDDs
+    cached = persistent().size()
     before = last_job_id()
     res = run_incremental(spark, str(feed), catalog_df, str(adir), out)
     n = last_job_id() - before
     assert res["epochs"] == 1
     assert n <= REFRESH_JOBS, f"{n} jobs per warm refresh, budget {REFRESH_JOBS}"
+    # the surface map is released; the one RDD a refresh still leaves is
+    # the updated mapping's localCheckpoint
+    assert persistent().size() <= cached + 1

@@ -1,4 +1,4 @@
-"""Streaming/incremental tests: availableNow drain ≡ batch pipeline;
+"""Streaming/incremental tests: availableNow drain ≡ batch oracle;
 checkpoint resume picks up only new files."""
 
 from __future__ import annotations
@@ -7,13 +7,20 @@ import os
 
 import pandas as pd
 
-from kg.pipeline import run_pipeline
+from kg.oracle import oracle_edges
 from kg.streaming import run_incremental
+
+_KEY = ["src", "dst", "rel_type", "stoichiometry", "order"]
 
 
 def _edges_key(df) -> pd.DataFrame:
-    key = ["src", "dst", "rel_type", "stoichiometry", "order"]
-    return df.toPandas()[key].sort_values(key).reset_index(drop=True)
+    return df.toPandas()[_KEY].sort_values(_KEY).reset_index(drop=True)
+
+
+def _oracle_key(got: pd.DataFrame, *inputs: pd.DataFrame) -> pd.DataFrame:
+    """oracle_edges over the pandas inputs, keyed and typed like ``got``."""
+    want = oracle_edges(*inputs)[_KEY].sort_values(_KEY).reset_index(drop=True)
+    return want.astype(got.dtypes.to_dict())
 
 
 def _write_chunks(transcripts_pdf, path, n_chunks=3):
@@ -31,7 +38,8 @@ def _write_chunks(transcripts_pdf, path, n_chunks=3):
 
 
 def test_incremental_equals_batch(
-    spark, transcripts_pdf, transcripts_df, catalog_df, alias_pairs_df, tmp_path
+    spark, transcripts_pdf, catalog_pdf, alias_pairs_pdf, catalog_df, alias_pairs_df,
+    tmp_path,
 ):
     stream_dir = str(tmp_path / "feed")
     out_dir = str(tmp_path / "out")
@@ -39,8 +47,8 @@ def test_incremental_equals_batch(
 
     inc = run_incremental(spark, stream_dir, catalog_df, alias_pairs_df, out_dir)
     assert inc["epochs"] >= 1
-    batch = run_pipeline(spark, transcripts_df, catalog_df, alias_pairs_df)
-    assert _edges_key(inc["edges"]).equals(_edges_key(batch["edges"]))
+    got = _edges_key(inc["edges"])
+    assert got.equals(_oracle_key(got, transcripts_pdf, catalog_pdf, alias_pairs_pdf))
 
 
 def test_incremental_resume_processes_only_new_files(
@@ -208,10 +216,8 @@ def test_incremental_composes_alias_delta_with_new_transcripts(spark, tmp_path):
     with the edge-partial merge: the epoch's alias work reads only the
     NEW alias file (delta-sized cc_stats), the epoch's edge work reads
     only the epoch's triples + prior snapshot, and the final edges equal
-    a full batch rebuild over everything."""
+    the batch oracle over everything."""
     import datetime as dt
-
-    from kg.schema import ALIAS_PAIRS_SCHEMA, TRANSCRIPTS_SCHEMA
 
     def _t(conv, idx, text):
         return (conv, idx, "user", text, None, dt.datetime(2025, 1, 1))
@@ -275,17 +281,14 @@ def test_incremental_composes_alias_delta_with_new_transcripts(spark, tmp_path):
     assert files and all("edge_state_stream" in f for f in files)
     assert not any("canonical_triples_stream" in f for f in files)
 
-    # composed result == full batch rebuild over all transcripts + aliases
-    tr_pdf = pd.DataFrame(all_turns, columns=tcols)
-    tr_pdf["turn_idx"] = tr_pdf["turn_idx"].astype("int32")
-    tr_pdf["tool"] = tr_pdf["tool"].astype("string")
-    tr = spark.createDataFrame(tr_pdf, schema=TRANSCRIPTS_SCHEMA)
-    ap = spark.createDataFrame(
+    # composed result == the oracle over all transcripts + aliases
+    got = _edges_key(second["edges"])
+    assert got.equals(_oracle_key(
+        got,
+        pd.DataFrame(all_turns, columns=tcols),
+        catalog.toPandas(),
         pd.DataFrame(all_pairs, columns=["src", "dst", "kind"]),
-        schema=ALIAS_PAIRS_SCHEMA,
-    )
-    batch = run_pipeline(spark, tr, catalog, ap)
-    assert _edges_key(second["edges"]).equals(_edges_key(batch["edges"]))
+    ))
     # the C1/C2 merge actually happened through the composed mapping
     merged = {(r["src"], r["dst"]) for r in second["edges"].collect()
               if r["rel_type"] == "co_occurs_with"}
@@ -339,8 +342,6 @@ def test_incremental_mention_free_refresh(
     """A micro-batch whose turns yield no triples writes no epoch
     directory of triples; its edge delta is empty, the stream goes on,
     and the edges after the next refresh equal the oracle's."""
-    from kg.oracle import oracle_edges
-
     feed = tmp_path / "qfeed"
     feed.mkdir()
     out = str(tmp_path / "qout")
@@ -364,11 +365,9 @@ def test_incremental_mention_free_refresh(
     assert not os.path.exists(
         os.path.join(out, "canonical_triples_stream", f"epoch={epoch - 1}"))
 
-    key = ["src", "dst", "rel_type", "stoichiometry", "order"]
     got = _edges_key(res["edges"])
-    want = oracle_edges(pd.concat(parts, ignore_index=True), catalog_pdf, alias_pairs_pdf)
-    want = want[key].sort_values(key).reset_index(drop=True).astype(got.dtypes.to_dict())
-    assert got.equals(want)
+    assert got.equals(
+        _oracle_key(got, pd.concat(parts, ignore_index=True), catalog_pdf, alias_pairs_pdf))
 
 
 def test_incremental_driver_tables_are_local_relations(
